@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.tools.MetricsListener
 
 /** Per-round benchmark main (driver contract): run every SparkEntry query at
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
@@ -51,26 +48,6 @@ import org.apache.spark.sql.SparkSession
   * status.
   */
 object Bench {
-
-  /** Accumulates task-level metrics across all jobs; snapshot around each
-    * query to attribute executor work (vs wall clock) per query. */
-  private final class TaskMetricsListener extends SparkListener {
-    val runMs = new AtomicLong() // executor run time (all tasks)
-    val gcMs = new AtomicLong() // GC time inside tasks
-    val cpuNs = new AtomicLong() // CPU time inside tasks
-    val tasks = new AtomicLong()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        runMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        cpuNs.addAndGet(m.executorCpuTime)
-        tasks.incrementAndGet()
-      }
-    }
-    def snapshot(): (Long, Long, Long, Long) =
-      (runMs.get(), gcMs.get(), cpuNs.get(), tasks.get())
-  }
 
   private def jvmGcMs(): Long = {
     import scala.jdk.CollectionConverters._
@@ -171,6 +148,11 @@ object Bench {
         org.apache.logging.log4j.Level.ERROR)
     } catch { case _: Throwable => () } // logging impl absent: keep the noise
 
+  /** The bench session: the engine profile plus the staged-suite split
+    * sizing — the same conf [[Verify.session]] checks against the oracle. */
+  private[graft] def session(cpus: String): org.apache.spark.sql.SparkSession =
+    GraftSession.stagedSuite(GraftSession.build("graft-bench", cpus))
+
   def main(args: Array[String]): Unit = {
     val tMain = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -190,48 +172,13 @@ object Bench {
     // artifact (r11: 637 s wall).
     val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE", "600").toDouble
     def elapsedSec(): Double = (System.nanoTime() - tMain) / 1e9
-    // Shuffle/spill scratch on the fastest local storage (see
-    // GraftSession.localDir): the sandbox's default /tmp is a slow overlay
-    // whose shuffle-file churn dominated small-stage walls.
-    val spark = GraftSession.withStatics(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // Bucketed tables here exist only for bucketing-aware joins; see
-      // GraftSession for why the auto heuristic is disabled.
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      // Bench-scale split sizing: the staged tables are ~0.1–0.7 MB/file
-      // (Staged.tableDir), so the 128 MB default would pack every file of
-      // a table back into ONE split and re-serialize the scans this layout
-      // exists to parallelize. One file per split here; a 100 TB deployment
-      // keeps the default (its files are row-group-sized already).
-      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
     muteBenignWarns()
-    val listener = new TaskMetricsListener
+    val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
 
     def run(name: String, dir: String): Unit =
       SparkEntry.queries(name)(spark, dir).write.mode("overwrite").format("noop").save()
-
-    // Listener delivery is async; metrics settle a few ms after an action
-    // returns. Wall time is captured BEFORE settling, so this only tightens
-    // attribution, never inflates a query's number.
-    def settled(): (Long, Long, Long, Long) = {
-      var prev = listener.snapshot()
-      var spins = 0
-      while (spins < 10) {
-        Thread.sleep(20)
-        val cur = listener.snapshot()
-        if (cur == prev) spins = 10 else { prev = cur; spins += 1 }
-      }
-      prev
-    }
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     // Warmup at the smallest SF: exercises every plan's codegen once.
@@ -288,7 +235,7 @@ object Bench {
     }
     locally {
       val t0 = System.nanoTime()
-      val warm = spark.newSession()
+      val warm = GraftSession.stagedSuite(spark.newSession())
       // Pool width swept: 16 threads measured no faster than 8 (67.5 vs
       // 64.2 s — the pass saturates the shared core pool, it is not
       // latency-bound on the streaming queries), so prepare's 8 stands.
@@ -310,7 +257,9 @@ object Bench {
     var order = 0
     val resultsBuf = scala.collection.mutable.LinkedHashMap.empty[String, Diag]
     names.foreach { name =>
-      val (r0, g0, c0, n0) = settled()
+      // Wall time is taken between settled listener snapshots, so settling
+      // only tightens attribution, never inflates a query's number.
+      val m0 = listener.settled(spark)
       // JMH-style inter-iteration GC, OUTSIDE the timed region: without it
       // the previous query's garbage (e.g. q20's exact-distinct Expand
       // right before q21) is collected inside the next query's window and
@@ -360,7 +309,7 @@ object Bench {
         val good = attempts.collect { case (w, true) => w }
         (if (good.nonEmpty) good else attempts.map(_._1)).toSeq
       }
-      val (r1, g1, c1, n1) = settled()
+      val m = listener.settled(spark) - m0
       val j1 = jvmGcMs()
       order += 1
       // Self CPU includes slices the hypervisor stole mid-run (the guest
@@ -370,8 +319,8 @@ object Bench {
         else (math.max(0.0, (hb1 - hb0) - (hs1 - hs0) - (sc1 - sc0)),
               math.max(0.0, hs1 - hs0))
       resultsBuf(name) = Diag(order, medianOf(walls), walls,
-        (r1 - r0) / 1e3, (g1 - g0) / 1e3,
-        (j1 - j0) / 1e3, (c1 - c0) / 1e9, n1 - n0,
+        m.runMs / 1e3, m.gcMs / 1e3,
+        (j1 - j0) / 1e3, m.cpuNs / 1e9, m.tasks,
         extCpuSec = ext, stealCpuSec = steal,
         windowSec = attempts.map(_._1).sum)
     }
@@ -394,7 +343,7 @@ object Bench {
     def remeasure(name: String, tag: String, graceSec: Double,
                   maxExtra: Int): Unit = {
       System.gc()
-      val (r0, g0, c0, n0) = settled()
+      val m0 = listener.settled(spark)
       val j0 = jvmGcMs()
       val (hb0, hs0) = hostCpuSec(); val sc0 = selfCpuSec()
       // (wall, succeeded) per attempt: failed walls stay OUT of the median
@@ -415,7 +364,7 @@ object Bench {
       }
       val extra = attempts.collect { case (w, true) => w }
       val (hb1, hs1) = hostCpuSec(); val sc1 = selfCpuSec()
-      val (r1, g1, c1, n1) = settled()
+      val m = listener.settled(spark) - m0
       val j1 = jvmGcMs()
       val d = resultsBuf(name)
       val walls = d.walls ++ extra
@@ -427,9 +376,9 @@ object Bench {
               math.max(0.0, d.stealCpuSec) + math.max(0.0, hs1 - hs0))
       resultsBuf(name) = d.copy(
         wall = medianOf(walls), walls = walls,
-        taskSec = d.taskSec + (r1 - r0) / 1e3, taskGcSec = d.taskGcSec + (g1 - g0) / 1e3,
-        jvmGcSec = d.jvmGcSec + (j1 - j0) / 1e3, cpuSec = d.cpuSec + (c1 - c0) / 1e9,
-        nTasks = d.nTasks + (n1 - n0), extraReps = d.extraReps + extra.size,
+        taskSec = d.taskSec + m.runMs / 1e3, taskGcSec = d.taskGcSec + m.gcMs / 1e3,
+        jvmGcSec = d.jvmGcSec + (j1 - j0) / 1e3, cpuSec = d.cpuSec + m.cpuNs / 1e9,
+        nTasks = d.nTasks + m.tasks, extraReps = d.extraReps + extra.size,
         extCpuSec = ext, stealCpuSec = steal,
         windowSec = d.windowSec + attempts.map(_._1).sum)
       System.err.println(f"[$tag] $name +${extra.size} reps, " +
@@ -514,7 +463,12 @@ object Bench {
     // to pass) folds that adjudication into the artifact. A flag that
     // SURVIVES the requeue (median over up to 5 reps spanning two points
     // in the run) is much stronger evidence of a real regression.
-    val preRegressions = regressionsOf(resultsBuf.toSeq)
+    // Both requeue sides are decided from ONE snapshot taken before either
+    // re-measures: a fast flag must not appear or vanish because the slow
+    // side's re-runs moved a median first.
+    val preRequeue = resultsBuf.toSeq
+    val preRegressions = regressionsOf(preRequeue)
+    val preSpeedups = speedupsOf(preRequeue)
     for ((k, w, b) <- preRegressions) {
       System.err.println(
         f"[bench-requeue] $k ${w}%.3f s vs recorded ${b}%.3f s (${w / b}%.2fx) — re-measuring")
@@ -527,7 +481,6 @@ object Bench {
     // ways. A genuine optimization survives its extra reps (the median over
     // 5 fast reps is still fast); a lucky-fast median gets corrected upward
     // exactly like a storm-slow median gets corrected downward.
-    val preSpeedups = speedupsOf(resultsBuf.toSeq)
     for ((k, w, b) <- preSpeedups) {
       System.err.println(
         f"[bench-requeue-fast] $k ${w}%.3f s vs recorded ${b}%.3f s (${b / w}%.2fx fast) — re-measuring")
@@ -538,6 +491,9 @@ object Bench {
     // claim re-measurement that never happened.
     val rerunCount = resultsBuf.count(_._2.extraReps > 0)
     val results = resultsBuf.toSeq
+    // Reps the artifact can vouch for: the FEWEST any query got (deadline
+    // degradation single-shots tail queries), next to the reps asked for.
+    val repsMeasured = if (results.isEmpty) 0 else results.map(_._2.walls.size).min
     val regressions = regressionsOf(results)
     val requeueCleared = preRegressions.size - regressions.size
     // Fast-side ledger disagreements that SURVIVED their extra reps —
@@ -663,11 +619,8 @@ object Bench {
           ",\"reps_measured\":" + d.walls.size +
           ",\"weather_suspect\":" + weatherSuspect(k, w, b) + "}"
       }.mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","unit":"sec","sf":"$sfDir"""" +
-      s""","n_queries":${results.size},"queries":${toJson(slowest)}""" +
-      s""","queries_omitted":${results.size - slowest.size}""" +
-      s""","prepare_sec":${sec(prepareSec)},"prepare_failed":$prepareFailed""" +
-      s""","reps":$reps,"respread_reruns":$rerunCount""" +
+    val runFields = s""","prepare_sec":${sec(prepareSec)},"prepare_failed":$prepareFailed""" +
+      s""","reps":$repsMeasured,"reps_target":$reps,"respread_reruns":$rerunCount""" +
       s""","task_cpu_ratio":${sec(contention)}""" +
       s""","steal_cores":${sec(stealSuite)}""" +
       s""","regressions_vs_recorded":${regressions.size}""" +
@@ -677,25 +630,16 @@ object Bench {
       s""","speedups_pre_requeue":${preSpeedups.size}""" +
       s""","fast_requeue_cleared":$fastRequeueCleared""" +
       s""","median_inflation_vs_recorded":${sec(medianInflation)}""" +
-      s""","flags_weather_attributed":$weatherCount""" +
+      s""","flags_weather_attributed":$weatherCount"""
+    val compact = s"""{"metric":"total","unit":"sec","sf":"$sfDir"""" +
+      s""","n_queries":${results.size},"queries":${toJson(slowest)}""" +
+      s""","queries_omitted":${results.size - slowest.size}""" + runFields +
       s""","worst_regressions":${regJson(regressions.take(8))}""" +
       s""","octave_ledger":"${octaveNote.replace("\\", "\\\\").replace("\"", "\\\"")}"""" +
       s""","full_map":"bench_out.json","value":${sec(total)}}"""
     println(compact)
     val full = s"""{"metric":"total","unit":"sec","sf":"$sfDir"""" +
-      s""","queries":${toJson(results)},"prepare_sec":${sec(prepareSec)}""" +
-      s""","prepare_failed":$prepareFailed""" +
-      s""","reps":$reps,"respread_reruns":$rerunCount""" +
-      s""","task_cpu_ratio":${sec(contention)}""" +
-      s""","steal_cores":${sec(stealSuite)}""" +
-      s""","regressions_vs_recorded":${regressions.size}""" +
-      s""","regressions_pre_requeue":${preRegressions.size}""" +
-      s""","requeue_cleared":$requeueCleared""" +
-      s""","speedups_vs_recorded":${speedups.size}""" +
-      s""","speedups_pre_requeue":${preSpeedups.size}""" +
-      s""","fast_requeue_cleared":$fastRequeueCleared""" +
-      s""","median_inflation_vs_recorded":${sec(medianInflation)}""" +
-      s""","flags_weather_attributed":$weatherCount""" +
+      s""","queries":${toJson(results)}""" + runFields +
       s""","regressions":${regJson(regressions)}""" +
       s""","speedups":${regJson(speedups)}""" +
       s""","diag":${toDiagJson(results)},"value":${sec(total)}}"""

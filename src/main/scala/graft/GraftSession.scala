@@ -27,9 +27,8 @@ object GraftSession {
     *
     * `SPARK_GRAFT_LOCAL_DIR` overrides (empty string = keep Spark's
     * default); otherwise `/dev/shm/graft_local` when writable AND big
-    * enough, else the platform default. Applied by every engine entry
-    * point (GraftSession / Bench / Verify / tools) so measurements and
-    * production defaults agree. */
+    * enough, else the platform default. Applied by [[build]], so every
+    * entry point's measurements and production defaults agree. */
   def localDir: Option[String] = scratchRoot("SPARK_GRAFT_LOCAL_DIR", "graft_local")
 
   /** Shared scratch-root policy (this and [[graft.sources.TempDirs]]):
@@ -56,30 +55,33 @@ object GraftSession {
         } else None
     }
 
-  /** Apply [[localDir]] to a session builder (no-op when None). */
-  def withLocalDir(b: SparkSession.Builder): SparkSession.Builder =
-    localDir.fold(b)(d => b.config("spark.local.dir", d))
-
-  /** JVM-static session defaults every engine entry point wants, applied
-    * on top of [[withLocalDir]].
+  /** JVM-static session defaults every engine entry point wants: the
+    * [[localDir]] (when set) and the codegen cache size.
     *
     * `spark.sql.codegen.cache.maxEntries` (STATIC conf — must be set before
     * the first session builds): the 208-query suite generates ~1600 distinct
     * whole-stage/expression codegen sources, and the default 100-entry cache
     * thrashes — every query's FIRST rep after a suite pass re-compiles its
     * generated sources (~50-400 ms measured per query via
-    * CodegenMetrics in TaskProfile). 2048 holds the whole suite; entries are
+    * `graft.tools.Profile tasks`). 2048 holds the whole suite; entries are
     * compiled-class references, so the cost is metaspace, not heap. A
     * long-lived production cluster wants the same headroom for the same
     * reason (one JVM serving many distinct plans). */
   def withStatics(b: SparkSession.Builder): SparkSession.Builder =
-    withLocalDir(b).config("spark.sql.codegen.cache.maxEntries", "2048")
+    localDir.fold(b)(d => b.config("spark.local.dir", d))
+      .config("spark.sql.codegen.cache.maxEntries", "2048")
 
+  /** The one session profile every entry point builds through (Main,
+    * Bench, Verify, the tools, the test suites): [[withStatics]], the
+    * engine's extensions ([[graft.functions.GraftExtensions]]: native SQL
+    * functions, approx/MV rewrite rules, as-of planner strategy) and the
+    * engine pins below. */
   def build(appName: String = "graft",
             cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
-    val spark = withLocalDir(SparkSession.builder()
+    val spark = withStatics(SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName))
+      .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -106,7 +108,18 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.registerAll(spark)
+    spark
+  }
+
+  /** Split sizing of the staged-suite drivers (Bench, Verify, Profile), set
+    * at runtime on top of [[build]], so the oracle checks the bench's conf.
+    * The staged tables are ~0.1–0.7 MB/file (Staged.tableDir): the 128 MB
+    * default would pack a table's files into ONE split and re-serialize the
+    * scans this layout exists to parallelize. Kept out of [[build]]: on
+    * small unstaged inputs the extra splits cost more than they win
+    * (olap_sql benchmark at 4 vCPU: cycle 3.4 s → 4.5 s). */
+  def stagedSuite(spark: SparkSession): SparkSession = {
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
     spark
   }
 }

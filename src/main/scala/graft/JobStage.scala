@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * operator is this job?"). `spark.job.description` is a thread-local
   * property stamped onto every job the body submits, so multi-job operators
   * (staged merges, foreachBatch pipelines) become attributable in the Spark
-  * UI and in [[graft.tools.JobTime]] — which otherwise prints `?` for every
+  * UI and in `graft.tools.Profile jobs` — which otherwise prints `?` for every
   * job, because the callSite property is only populated when set explicitly.
   *
   * Restores the previous description on exit (nested stages compose; the

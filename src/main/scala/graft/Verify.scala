@@ -1,22 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The bench's session conf ([[Bench.session]]), so the oracle checks the
+    * configuration the bench measures. */
+  private[graft] def session(cpus: String): org.apache.spark.sql.SparkSession =
+    GraftSession.stagedSuite(GraftSession.build("graft-verify", cpus))
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.withStatics(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      // See GraftSession: bucketed tables exist only for bucketing-aware
-      // joins; Spark's auto heuristic drops the bucketed read in those plans.
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     Bench.muteBenignWarns()
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (unset in the driver run): comma-separated
@@ -33,21 +28,11 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes quotes, backslashes and every control character, so
+    // SQL with a tab or CR still loads as JSON in the oracle compare.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .writeValueAsString(SparkEntry.oracleSql.asJava))
     spark.stop()
   }
 }

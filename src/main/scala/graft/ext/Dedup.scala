@@ -852,12 +852,18 @@ object Dedup {
         Some(pairs.select($"left_id".cast("long").as("left_id"),
           $"right_id".cast("long").as("right_id")).persist())
       else None
-    probed.foreach { src =>
-      val fetched = src
-        .selectExpr("left_id as _1", "right_id as _2").as[(Long, Long)]
-        .limit(cap + 1)
-        .collect()
-      if (fetched.length <= cap) {
+    // In-driver union-find when the probe fetched the whole (≤ cap) edge
+    // set; None sends the call to the distributed loop below.
+    val local: Option[DataFrame] = probed.flatMap { src =>
+      // A failed probe must not leave the persisted projection pinned.
+      val fetched =
+        try src
+          .selectExpr("left_id as _1", "right_id as _2").as[(Long, Long)]
+          .limit(cap + 1)
+          .collect()
+        catch { case e: Throwable => src.unpersist(blocking = false); throw e }
+      if (fetched.length > cap) None
+      else {
         src.unpersist(blocking = false)
         val parent = new java.util.HashMap[Long, Long]()
         def find(x: Long): Long = {
@@ -877,68 +883,70 @@ object Dedup {
         }
         val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
         parent.forEach((id, _) => out += ((id, find(id))))
-        return out.toSeq.toDF("id", "label")
+        Some(out.toSeq.toDF("id", "label"))
       }
     }
-    // >cap (or probe disabled): distributed loop. When the probe ran, its
-    // persisted projection feeds the edge build so the caller's pipeline is
-    // not recomputed; unpersisted alongside `edges` at the end.
-    val src = probed.getOrElse(pairs)
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def checkpointed(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    // undirected edge list, both directions
-    val edges = src.select($"left_id".as("src"), $"right_id".as("dst"))
-      .unionByName(src.select($"right_id".as("src"), $"left_id".as("dst")))
-      .distinct().persist()
-    var labels = checkpointed(
-      edges.select($"src".as("id")).distinct().withColumn("label", col("id")))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "dst2"), $"dst" === $"dst2")
-        .groupBy($"src").agg(min($"label").as("nbr_label"))
-      // pointer jump: my label's current label (labels are always node ids,
-      // so the self-join always resolves; left join for safety). Round 0's
-      // jump is the identity (label == id), so it starts at round 1.
-      val base = labels.join(neighborMin, $"id" === $"src", "left")
-      val joined =
-        if (i == 0) base.withColumn("jump_label", $"label")
-        else base.join(
-          labels.select($"id".as("jump_id"), $"label".as("jump_label")),
-          $"label" === $"jump_id", "left")
-      val newLabel = least($"label",
-        coalesce($"nbr_label", $"label"), coalesce($"jump_label", $"label"))
-      val next = checkpointed( // eager: the one full job this round
-        joined.select($"id", newLabel.as("label"),
-          (newLabel =!= $"label").as("changed")))
-      val maxChanged = next.agg(max($"changed")).collect().head // cached scan
-      converged = maxChanged.isNullAt(0) || !maxChanged.getBoolean(0)
-      roundProbe(i, next)
-      // `next` is materialized and lineage-truncated: the PREVIOUS
-      // generation's checkpoint blocks are now dead weight. Freeing them
-      // here bounds the loop's block-manager footprint to two generations;
-      // leaking one per iteration is an executor-memory leak on a 100 TB
-      // graph (and the measured GC-churn source at bench scale). Local
-      // checkpoints only — reliable checkpoint FILES are owned by the
-      // cleaner, and ONLY if the session enables
-      // spark.cleaner.referenceTracking.cleanCheckpoints (false by
-      // default; GraftSession sets it — a deployment with a checkpoint
-      // dir that drops that conf leaks one label-generation file per
-      // round for the app's lifetime).
-      if (!reliable)
-        org.apache.spark.sql.graftshim.checkpointRddOf(labels)
-          .foreach(_.unpersist(blocking = false))
-      labels = next.select($"id", $"label")
-      i += 1
+    local.getOrElse {
+      // >cap (or probe disabled): distributed loop. When the probe ran, its
+      // persisted projection feeds the edge build so the caller's pipeline is
+      // not recomputed; unpersisted alongside `edges` at the end.
+      val src = probed.getOrElse(pairs)
+      val reliable = spark.sparkContext.getCheckpointDir.isDefined
+      def checkpointed(df: DataFrame): DataFrame =
+        if (reliable) df.checkpoint() else df.localCheckpoint()
+      // undirected edge list, both directions
+      val edges = src.select($"left_id".as("src"), $"right_id".as("dst"))
+        .unionByName(src.select($"right_id".as("src"), $"left_id".as("dst")))
+        .distinct().persist()
+      var labels = checkpointed(
+        edges.select($"src".as("id")).distinct().withColumn("label", col("id")))
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIters) {
+        val neighborMin = edges
+          .join(labels.withColumnRenamed("id", "dst2"), $"dst" === $"dst2")
+          .groupBy($"src").agg(min($"label").as("nbr_label"))
+        // pointer jump: my label's current label (labels are always node ids,
+        // so the self-join always resolves; left join for safety). Round 0's
+        // jump is the identity (label == id), so it starts at round 1.
+        val base = labels.join(neighborMin, $"id" === $"src", "left")
+        val joined =
+          if (i == 0) base.withColumn("jump_label", $"label")
+          else base.join(
+            labels.select($"id".as("jump_id"), $"label".as("jump_label")),
+            $"label" === $"jump_id", "left")
+        val newLabel = least($"label",
+          coalesce($"nbr_label", $"label"), coalesce($"jump_label", $"label"))
+        val next = checkpointed( // eager: the one full job this round
+          joined.select($"id", newLabel.as("label"),
+            (newLabel =!= $"label").as("changed")))
+        val maxChanged = next.agg(max($"changed")).collect().head // cached scan
+        converged = maxChanged.isNullAt(0) || !maxChanged.getBoolean(0)
+        roundProbe(i, next)
+        // `next` is materialized and lineage-truncated: the PREVIOUS
+        // generation's checkpoint blocks are now dead weight. Freeing them
+        // here bounds the loop's block-manager footprint to two generations;
+        // leaking one per iteration is an executor-memory leak on a 100 TB
+        // graph (and the measured GC-churn source at bench scale). Local
+        // checkpoints only — reliable checkpoint FILES are owned by the
+        // cleaner, and ONLY if the session enables
+        // spark.cleaner.referenceTracking.cleanCheckpoints (false by
+        // default; GraftSession sets it — a deployment with a checkpoint
+        // dir that drops that conf leaks one label-generation file per
+        // round for the app's lifetime).
+        if (!reliable)
+          org.apache.spark.sql.graftshim.checkpointRddOf(labels)
+            .foreach(_.unpersist(blocking = false))
+        labels = next.select($"id", $"label")
+        i += 1
+      }
+      edges.unpersist(blocking = false)
+      probed.foreach(_.unpersist(blocking = false))
+      if (!converged) throw new IllegalStateException(
+        s"connectedComponents: no fixed point after $maxIters rounds " +
+          "(component diameter exceeds maxIters — raise it)")
+      labels
     }
-    edges.unpersist(blocking = false)
-    probed.foreach(_.unpersist(blocking = false))
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents: no fixed point after $maxIters rounds " +
-        "(component diameter exceeds maxIters — raise it)")
-    labels
   }
 
   /** End-to-end near-dup corpus dedup: MinHash→LSH→verify pairs, connected

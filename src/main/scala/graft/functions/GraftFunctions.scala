@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graftshim.registerTempFunction
 
 /** SQL-surface registration of the engine's native expressions, so the K7
   * ad-hoc SQL capability (SURVEY.md §2) covers them too:
@@ -12,12 +10,10 @@ import org.apache.spark.sql.graftshim.registerTempFunction
   *   SELECT cosine_sim(a.embedding, b.embedding) FROM ...
   *   SELECT minhash_sig(shingle_hashes(text, 3)) FROM documents
   *
-  * Two registration paths:
-  *  - [[GraftExtensions]]: `SparkSessionExtensions.injectFunction` for
-  *    sessions built with `.withExtensions(new GraftExtensions)` or
-  *    `spark.sql.extensions=graft.functions.GraftExtensions`;
-  *  - [[GraftFunctions.registerAll]]: runtime registration on any live
-  *    session (used by Verify/Bench/tests).
+  * Registered at session build time by [[GraftExtensions]]
+  * (`SparkSessionExtensions.injectFunction`), which [[graft.GraftSession.build]]
+  * applies; any other session opts in with
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 object GraftFunctions {
 
@@ -49,14 +45,10 @@ object GraftFunctions {
     "rolling_hash_min" -> arity("rolling_hash_min", 2)(es =>
       RollingHashMin(es(0), intLit(es(1), "window width"))),
     "trigram_stats" -> arity("trigram_stats", 1)(es => TrigramStats(es(0))))
-
-  /** Register every native function as a temp function on a live session. */
-  def registerAll(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) => registerTempFunction(spark, name, b) }
 }
 
-/** Builder-time injection: `SparkSession.builder().withExtensions(new
-  * GraftExtensions)` or `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
+/** Builder-time injection, applied by [[graft.GraftSession.build]]; other
+  * sessions use `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, b) =>
@@ -71,9 +63,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // registered AND the session opts in).
     e.injectOptimizerRule(s => graft.plans.MvRewriteRule(s))
     // The custom as-of-join physical strategy, so builder-time sessions get
-    // the complete engine (functions + rule + planner) in one extension —
-    // the live-session twin is the addStrategy call inside
-    // graft.plans.NativeAsOfJoin.lookup.
+    // the complete engine (functions + rules + planner) in one extension.
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -25,34 +24,17 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * struct would change null-tuple semantics). A FILTER clause is carried
   * over unchanged (it applies to input rows, orthogonal to the sketch).
   *
-  * Registration mirrors [[graft.functions.GraftFunctions]]'s two paths:
-  *  - builder-time: [[graft.functions.GraftExtensions]] injects it via
-  *    `injectOptimizerRule` (runs in the operator-optimization batch);
-  *  - live session: [[ApproxDistinct.install]] appends it to
-  *    `spark.experimental.extraOptimizations` (the "User Provided
-  *    Optimizers" batch). Both see `isDistinct = true` intact for the
-  *    single-distinct shape, which Spark leaves to physical planning.
+  * Registered at session build time: [[graft.functions.GraftExtensions]]
+  * injects it via `injectOptimizerRule`, so it runs in the operator-
+  * optimization batch, before `RewriteDistinctAggregates` expands a
+  * multi-distinct aggregate — single- and multi-distinct shapes both see
+  * `isDistinct = true` intact.
   */
 object ApproxDistinct {
   /** Session flag: rewrite exact distinct counts to HLL++ when "true". */
   val EnabledKey = "spark.graft.approxDistinct.enabled"
   /** Relative standard deviation for the sketch (HLL++ default 0.05). */
   val RsdKey = "spark.graft.approxDistinct.rsd"
-
-  /** Idempotently register the rewrite on a live session. Inert until the
-    * session sets [[EnabledKey]] to true.
-    *
-    * BATCH CAVEAT vs the builder path: `extraOptimizations` run in the
-    * "User Provided Optimizers" batch, AFTER `RewriteDistinctAggregates` —
-    * so a MULTI-distinct aggregate (`count(DISTINCT a), count(DISTINCT b)`)
-    * has already been expanded there and stays exact; only the builder-time
-    * injection (operator-optimization batch) rewrites that shape. Single-
-    * distinct counts rewrite on both paths. Sessions that need the
-    * multi-distinct rewrite must be built with GraftExtensions. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(ApproxDistinctRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
 }
 
 object ApproxDistinctRewrite extends Rule[LogicalPlan] {

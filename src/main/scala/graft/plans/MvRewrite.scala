@@ -235,16 +235,9 @@ object MvRewrite {
       combineRollups(current.unionByName(delta), d.groupCols, d.measures))
   }
 
-  /** Idempotently register the rewrite rule on a live session. Inert until
-    * [[EnabledKey]] is set to true and a rollup is registered. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewriteRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewriteRule(spark)
-
   /** Explicit single-query form: rewrite `df` against this session's
     * registered rollups and return the rewritten frame (unchanged when not
-    * derivable). Unlike the [[install]]+[[EnabledKey]] transparent path —
+    * derivable). Unlike the [[EnabledKey]] transparent path —
     * whose rule runs at each action's optimization, session-wide — this
     * rewrites once, here, regardless of the flag, so the caller can hand
     * the frame to any writer without leaving rewrite mode enabled for
@@ -259,9 +252,10 @@ object MvRewrite {
     }
 }
 
-/** The rewrite itself. Runs in the "User Provided Optimizers" batch, after
-  * filter pushdown and column pruning have normalized the plan to
-  * `Aggregate → [Project/Filter]* → LogicalRelation`.
+/** The rewrite itself. Injected by [[graft.functions.GraftExtensions]] into
+  * the operator-optimization batch, which runs it to a fixed point together
+  * with filter pushdown and column pruning; it matches the normalized
+  * `Aggregate → [Project/Filter]* → LogicalRelation` shape.
   */
 final case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import MvRewrite._

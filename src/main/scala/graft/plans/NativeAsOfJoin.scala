@@ -176,6 +176,9 @@ object NativeAsOfJoin {
   def lookup(left: DataFrame, right: DataFrame, keys: Seq[String],
              timeCol: String, rightVals: Seq[String]): DataFrame = {
     val spark = left.sparkSession
+    // GraftSession.build sessions carry the strategy already (GraftExtensions);
+    // this public entry point must also plan on any other session, where the
+    // node would otherwise have no strategy to become the physical operator.
     addStrategy(spark, AsOfJoinStrategy)
     val lPlan = left.queryExecution.analyzed
     // Re-alias the right side with fresh exprIds: when both inputs derive

@@ -108,7 +108,7 @@ object EventsStream {
     * watermark advancement alone. [[startPinned]]'s `noSettle = true` turns
     * it OFF for run-once queries whose DECLARED RESULT provably does not
     * depend on the settling batch (r19, the streaming driver floor —
-    * JobTime measured 0.3-0.8 s of state-store commit + planning per
+    * a per-job profile measured 0.3-0.8 s of state-store commit + planning per
     * settling batch):
     *
     *  - complete-mode aggregations (q23, q82): every trigger emits the full

@@ -1,7 +1,7 @@
 package graft.tools
 
 /** The ONE parser of `/proc/stat`'s aggregate cpu line — Bench's per-query
-  * contention telemetry and QTime's isolation-probe weather stamp both
+  * contention telemetry and Profile's isolation-probe weather stamp both
   * read it, and two hand-rolled copies with different indexing conventions
   * is how a layout quirk gets fixed in one and not the other.
   *

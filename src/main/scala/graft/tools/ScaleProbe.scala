@@ -32,8 +32,8 @@ object ScaleProbe {
     // flattening vs compounding is measured, not argued.
     val replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "8").toInt
     // SPARK_GRAFT_BIG_DIR: a STABLE replicated dir reused across probe /
-    // JobTime invocations — staging the 64x tables costs minutes, and a
-    // focused attribution session (probe, then JobTime the outliers on the
+    // Profile invocations — staging the 64x tables costs minutes, and a
+    // focused attribution session (probe, then profile the outliers on the
     // SAME data) should pay it once. A marker records the replica count the
     // dir was staged at; a mismatched or absent marker re-stages in place.
     // Default (env unset) keeps the self-cleaning JVM-lifetime temp dir.
@@ -46,7 +46,7 @@ object ScaleProbe {
     // one-file-per-upstream-partition layout below is the recorded one):
     // the direct write lands 64 replicas x 32 splits = 2048 ~400 KB files
     // at 64x, and per-query driver listing/split planning of those files
-    // is visible in scan-heavy walls (q10's 64x JobTime: 1.8 s of executor
+    // is visible in scan-heavy walls (q10's 64x job profile: 1.8 s of executor
     // jobs under a 6.6 s wall). Two "fixes" were tried and measured WORSE:
     // repartition(64) randomized row order corpus-wide and tripled+ every
     // sort/window/SMJ wall (q02 4.1x -> 42x, q05 8.9x -> 53x — real tables

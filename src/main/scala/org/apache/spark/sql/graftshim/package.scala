@@ -18,14 +18,6 @@ package object graftshim {
   def columnOf(e: Expression): Column = classic.ExpressionUtils.column(e) // verified Spark 4.1.2
   def expressionOf(c: Column): Expression = classic.ExpressionUtils.expression(c) // verified Spark 4.1.2
 
-  /** Register a temp SQL function on a live session (the runtime counterpart
-    * of SparkSessionExtensions.injectFunction, which only applies at session
-    * build time). */
-  def registerTempFunction(spark: SparkSession, name: String,
-                           builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf") // verified Spark 4.1.2
-
   /** The classic session's JVM-unique UUID (`sessionUUID` is private[sql]).
     * Unlike identityHashCode, never reused across a session's GC. */
   def sessionUUIDOf(spark: SparkSession): String =

@@ -9,8 +9,6 @@ import graft.plans.ApproxDistinct
   * sketch's error bound, and shapes the rewrite must not touch stay exact. */
 class ApproxDistinctSpec extends SparkSpec {
 
-  ApproxDistinct.install(spark)
-
   private def optimized(df: DataFrame): String =
     df.queryExecution.optimizedPlan.toString
 

@@ -330,6 +330,18 @@ class ExtSpec extends SparkSpec {
     assert(dist(4L) == 1L && dist(12L) == 10L)
   }
 
+  test("connected components: a failing probe fetch releases its persisted projection") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    // A range source, not a local Seq: the optimizer would evaluate the
+    // error over a LocalRelation while planning the persist itself.
+    val pairs = spark.range(1, 4).select(col("id").as("left_id"),
+      when(col("id") === 3L, raise_error(lit("probe fetch failed")))
+        .otherwise(col("id") + 1).as("right_id"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](Dedup.connectedComponents(pairs))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("count_min_sketch aggregate builds the identical sketch to df.stat.countMinSketch") {
     // r19 (guide §4): q83/q148 build their CMS with the codegen
     // count_min_sketch aggregate instead of the RDD-backed stat helper.

@@ -6,7 +6,6 @@ import graft.functions.GraftFunctions
 class FunctionsSpec extends SparkSpec {
 
   test("native kernels are callable from SQL after registration") {
-    GraftFunctions.registerAll(spark)
     graft.sources.Tables.registerAll(spark, sf0001)
     val row = spark.sql(
       """SELECT cosine_sim(embedding, embedding) AS self_cos,
@@ -28,7 +27,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("kernel input typing: mixed-width cosine rejected, int arrays auto-widen, bad width rejected") {
-    GraftFunctions.registerAll(spark)
     // cosine_sim dispatches its raw-memory kernel on the LEFT type; a
     // mixed float/double pair would read the right side at the wrong
     // stride — must fail ANALYSIS, not return garbage.
@@ -74,7 +72,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("custom expressions constant-fold: literal inputs collapse in the optimized plan") {
-    GraftFunctions.registerAll(spark)
     val df = spark.sql("SELECT rolling_hash_min('hello world hello', 8) AS fp")
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(!optimized.contains("rolling_hash_min"),

@@ -22,7 +22,6 @@ class MvRewriteSpec extends SparkSpec {
                         measures: Seq[String])(body: String => A): A = {
     val mvDir = Files.createTempDirectory("graft_mv_").toString + "/rollup"
     MvRewrite.defineRollup(spark, "t", factDir, mvDir, groupCols, measures)
-    MvRewrite.install(spark)
     spark.conf.set(MvRewrite.EnabledKey, "true")
     try body(mvDir)
     finally spark.conf.set(MvRewrite.EnabledKey, "false")

@@ -9,6 +9,15 @@ import graft.ops.SkewJoin
   * joins broadcast, salting balances skew without changing results. */
 class PlanSpec extends SparkSpec {
 
+  /** Run `body` with broadcast joins off, then restore the session's own
+    * threshold (the engine profile's 64 MB; `unset` would drop the shared
+    * suite session to Spark's 10 MB default for every later suite). */
+  private def withoutBroadcast[A](body: => A): A = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
@@ -26,13 +35,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("with broadcast disabled the big join falls back to sort-merge (both strategies live)") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withoutBroadcast {
       val li = graft.sources.Tables.lineitem(spark, sf0001)
       val o = graft.sources.Tables.orders(spark, sf0001)
       val plan = planOf(li.join(o, li("l_orderkey") === o("o_orderkey")))
       assert(plan.contains("SortMergeJoin"))
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("correlated scalar subquery is decorrelated into an aggregate + join") {
@@ -72,8 +80,7 @@ class PlanSpec extends SparkSpec {
     // (orderkey ⊆ keys) is satisfied by that partitioning — the aggregates
     // must run exchange-free, leaving the join's two sides plus the
     // result-bounded supplier re-key and final sort as the only shuffles.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withoutBroadcast {
       val plan = planOf(graft.queries.Extra.q75OnlySlowSupplier(spark, sf0001))
       assert(plan.contains("SortMergeJoin"), "big-orders regime should sort-merge")
       val exchanges = plan.linesIterator
@@ -83,7 +90,7 @@ class PlanSpec extends SparkSpec {
       assert(exchanges <= 5,
         s"expected ≤5 exchanges (join sides + bounded rekey + sort), got $exchanges — " +
           "an aggregation stopped reusing the join's orderkey partitioning")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("q102: LATERAL with ORDER BY + LIMIT decorrelates to WindowGroupLimit + hash join, no nested loop") {
@@ -393,8 +400,7 @@ class PlanSpec extends SparkSpec {
       assert(nFiles <= 8, s"bucketed table fragmented: $nFiles files for 8 buckets")
       // Force the confirm join to sort-merge (in production history is far
       // beyond any broadcast threshold) so the plan assert is meaningful.
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      withoutBroadcast {
         val out = graft.ext.Dedup.newAgainstHistoryTable(
           spark, "graft_hist_hashes_spec", batch, expectedHistory = 10000L)
         // Walk the physical plan BEFORE any action: once AQE materializes
@@ -426,7 +432,7 @@ class PlanSpec extends SparkSpec {
           expectedHistory = 10000L)
         assert(out.collect().sortBy(_.getLong(0)).toSeq ==
           plain.collect().sortBy(_.getLong(0)).toSeq)
-      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
     } finally spark.sql("DROP TABLE IF EXISTS graft_hist_hashes_spec")
   }
 
