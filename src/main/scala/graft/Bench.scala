@@ -1,6 +1,8 @@
 package graft
 
-import graft.tools.MetricsListener
+import scala.collection.immutable.ListMap
+
+import graft.tools.{Ledger, MetricsListener}
 
 /** Per-round benchmark main (driver contract): run every SparkEntry query at
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
@@ -128,26 +130,6 @@ object Bench {
     * and took a worktree A/B to adjudicate). */
   private val SpreadLimit = 3.0
 
-  /** Mute the benign per-query WARN chatter that drowns the driver's
-    * 2000-char stdout/stderr tail. Every unpartitioned-window site in this
-    * repo is a bounded frame (month/day grids, a 25-row nation rank —
-    * audited in VERDICT r09), so `WindowExec`'s "No Partition Defined"
-    * warning carries no signal here; real anomalies still surface at ERROR. */
-  def muteBenignWarns(): Unit =
-    try {
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window",
-        org.apache.logging.log4j.Level.ERROR)
-      // "RDD N was locally checkpointed … cannot be recomputed after
-      // unpersisting": by design — iterative kernels and q185 free a
-      // checkpoint generation only AFTER its result-sized successor is
-      // materialized. The warn repeats per freed generation and crowds
-      // the driver's bounded bench-tail capture.
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.rdd.MapPartitionsRDD",
-        org.apache.logging.log4j.Level.ERROR)
-    } catch { case _: Throwable => () } // logging impl absent: keep the noise
-
   /** The bench session: the engine profile plus the staged-suite split
     * sizing — the same conf [[Verify.session]] checks against the oracle. */
   private[graft] def session(cpus: String): org.apache.spark.sql.SparkSession =
@@ -173,7 +155,6 @@ object Bench {
     val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE", "600").toDouble
     def elapsedSec(): Double = (System.nanoTime() - tMain) / 1e9
     val spark = session(cpus)
-    muteBenignWarns()
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
 
@@ -413,22 +394,10 @@ object Bench {
       // Exact-basename match: the recorded medians are sf0.1-specific, and a
       // substring test would also apply them to e.g. sf0.12 or sf0.1-alt
       // dirs, producing spurious cross-scale regression flags.
-      if (new java.io.File(sfDir).getName != "sf0.1" ||
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(path))) Map.empty
-      else try {
-        import org.json4s._
-        val j = org.json4s.jackson.JsonMethods.parse(new String(
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-          java.nio.charset.StandardCharsets.UTF_8))
-        (j \ "queries") match {
-          case JObject(fields) => fields.collect {
-            case (k, JDouble(v)) => k -> v
-            case (k, JInt(v)) => k -> v.toDouble
-            case (k, JDecimal(v)) => k -> v.toDouble
-          }.toMap
-          case _ => Map.empty
-        }
-      } catch {
+      if (new java.io.File(sfDir).getName != "sf0.1") Map.empty
+      else try Ledger.read(path).fold(Map.empty[String, Double])(
+        j => Ledger.nums(j.path("queries")))
+      catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] baseline $path unreadable: ${e.getMessage}")
           Map.empty
@@ -510,24 +479,18 @@ object Bench {
     regressions.foreach { case (k, w, b) => System.err.println(
       f"[bench-regression] $k ${w}%.3f s vs recorded ${b}%.3f s (${w / b}%.2fx) " +
         s"[${contTag(resultsBuf(k))}]") }
-    def sec(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def toJson(rs: Seq[(String, Diag)]): String =
-      rs.map { case (k, d) => "\"" + k + "\":" + sec(d.wall) }.mkString("{", ",", "}")
-    def toDiagJson(rs: Seq[(String, Diag)]): String =
-      rs.map { case (k, d) =>
-        "\"" + k + "\":{\"order\":" + d.order + ",\"wall_sec\":" + sec(d.wall) +
-          ",\"wall_reps\":" + d.walls.map(sec).mkString("[", ",", "]") +
-          ",\"wall_spread\":" + sec(spreadOf(d.walls)) +
-          ",\"extra_reps\":" + d.extraReps +
-          ",\"task_sec\":" + sec(d.taskSec) + ",\"task_gc_sec\":" + sec(d.taskGcSec) +
-          ",\"jvm_gc_sec\":" + sec(d.jvmGcSec) + ",\"cpu_sec\":" + sec(d.cpuSec) +
-          ",\"n_tasks\":" + d.nTasks +
-          ",\"task_cpu_ratio\":" + sec(d.taskCpuRatio) +
-          ",\"ext_cpu_sec\":" + sec(d.extCpuSec) +
-          ",\"ext_cores\":" + sec(d.extCores) +
-          ",\"steal_cpu_sec\":" + sec(d.stealCpuSec) +
-          ",\"steal_cores\":" + sec(d.stealCores) + "}"
-      }.mkString("{", ",", "}")
+    // Report values: 3 decimals, half-up, serialized as JSON numbers.
+    def sec(v: Double): java.math.BigDecimal =
+      java.math.BigDecimal.valueOf(v).setScale(3, java.math.RoundingMode.HALF_UP)
+    def walls(rs: Seq[(String, Diag)]) = ListMap(rs.map { case (k, d) => k -> sec(d.wall) }: _*)
+    def diagOf(d: Diag) = ListMap("order" -> d.order, "wall_sec" -> sec(d.wall),
+      "wall_reps" -> d.walls.map(sec), "wall_spread" -> sec(spreadOf(d.walls)),
+      "extra_reps" -> d.extraReps, "task_sec" -> sec(d.taskSec),
+      "task_gc_sec" -> sec(d.taskGcSec), "jvm_gc_sec" -> sec(d.jvmGcSec),
+      "cpu_sec" -> sec(d.cpuSec), "n_tasks" -> d.nTasks,
+      "task_cpu_ratio" -> sec(d.taskCpuRatio), "ext_cpu_sec" -> sec(d.extCpuSec),
+      "ext_cores" -> sec(d.extCores), "steal_cpu_sec" -> sec(d.stealCpuSec),
+      "steal_cores" -> sec(d.stealCores))
     val total = results.map(_._2.wall).sum
     // Suite-level contention fingerprint: executor task run time vs task CPU
     // time across every rep of every query. Quiet-box baseline ~1.9 (run
@@ -552,25 +515,12 @@ object Bench {
     // scaling) is surfaced here so the bench artifact names the scale
     // instrument and its coverage alongside the wall-time ledger.
     val octaveNote: String = try {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_OCTAVE_BASELINE", "OCTAVE_BASELINE.json"))
-      if (!java.nio.file.Files.exists(p)) "absent"
-      else {
-        import org.json4s._
-        val doc = org.json4s.jackson.JsonMethods.parse(new String(
-          java.nio.file.Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8))
-        // Matcher set kept in sync with ScaleProbe's ledger reader (JInt /
-        // JDouble / JDecimal) so the two consumers of the same file cannot
-        // drift on a writer's number representation.
-        def num(v: JValue): String = v match {
-          case JInt(n) => n.toString
-          case JDouble(n) => n.toInt.toString
-          case JDecimal(n) => n.toInt.toString
-          case _ => "?"
-        }
-        val reps = num(doc \ "_meta" \ "replicas")
-        val nq = num(doc \ "_meta" \ "n_queries")
-        s"${p.getFileName}: ${reps}x replicas, $nq queries recorded"
+      val p = sys.env.getOrElse("SPARK_GRAFT_OCTAVE_BASELINE", "OCTAVE_BASELINE.json")
+      Ledger.read(p).fold("absent") { doc =>
+        def num(field: String): String =
+          Ledger.num(doc.path("_meta").path(field)).fold("?")(_.toInt.toString)
+        s"${new java.io.File(p).getName}: ${num("replicas")}x replicas, " +
+          s"${num("n_queries")} queries recorded"
       }
     } catch { case scala.util.control.NonFatal(_) => "unreadable" }
     // The driver captures only a ~2000-char TAIL of stdout, so a single line
@@ -609,40 +559,37 @@ object Bench {
         (medianInflation >= 1.15 && w / b <= medianInflation * 1.5)
     }
     val weatherCount = regressions.count { case (k, w, b) => weatherSuspect(k, w, b) }
-    def regJson(rs: Seq[(String, Double, Double)]): String =
-      rs.map { case (k, w, b) =>
-        val d = resultsBuf(k)
-        "\"" + k + "\":{\"sec\":" + sec(w) + ",\"baseline_sec\":" + sec(b) +
-          ",\"steal_cores\":" + sec(d.stealCores) +
-          ",\"ext_cores\":" + sec(d.extCores) +
-          ",\"task_cpu_ratio\":" + sec(d.taskCpuRatio) +
-          ",\"reps_measured\":" + d.walls.size +
-          ",\"weather_suspect\":" + weatherSuspect(k, w, b) + "}"
-      }.mkString("{", ",", "}")
-    val runFields = s""","prepare_sec":${sec(prepareSec)},"prepare_failed":$prepareFailed""" +
-      s""","reps":$repsMeasured,"reps_target":$reps,"respread_reruns":$rerunCount""" +
-      s""","task_cpu_ratio":${sec(contention)}""" +
-      s""","steal_cores":${sec(stealSuite)}""" +
-      s""","regressions_vs_recorded":${regressions.size}""" +
-      s""","regressions_pre_requeue":${preRegressions.size}""" +
-      s""","requeue_cleared":$requeueCleared""" +
-      s""","speedups_vs_recorded":${speedups.size}""" +
-      s""","speedups_pre_requeue":${preSpeedups.size}""" +
-      s""","fast_requeue_cleared":$fastRequeueCleared""" +
-      s""","median_inflation_vs_recorded":${sec(medianInflation)}""" +
-      s""","flags_weather_attributed":$weatherCount"""
-    val compact = s"""{"metric":"total","unit":"sec","sf":"$sfDir"""" +
-      s""","n_queries":${results.size},"queries":${toJson(slowest)}""" +
-      s""","queries_omitted":${results.size - slowest.size}""" + runFields +
-      s""","worst_regressions":${regJson(regressions.take(8))}""" +
-      s""","octave_ledger":"${octaveNote.replace("\\", "\\\\").replace("\"", "\\\"")}"""" +
-      s""","full_map":"bench_out.json","value":${sec(total)}}"""
-    println(compact)
-    val full = s"""{"metric":"total","unit":"sec","sf":"$sfDir"""" +
-      s""","queries":${toJson(results)}""" + runFields +
-      s""","regressions":${regJson(regressions)}""" +
-      s""","speedups":${regJson(speedups)}""" +
-      s""","diag":${toDiagJson(results)},"value":${sec(total)}}"""
+    def flags(rs: Seq[(String, Double, Double)]) = ListMap(rs.map { case (k, w, b) =>
+      val d = resultsBuf(k)
+      k -> ListMap("sec" -> sec(w), "baseline_sec" -> sec(b),
+        "steal_cores" -> sec(d.stealCores), "ext_cores" -> sec(d.extCores),
+        "task_cpu_ratio" -> sec(d.taskCpuRatio), "reps_measured" -> d.walls.size,
+        "weather_suspect" -> weatherSuspect(k, w, b))
+    }: _*)
+    val head = ListMap("metric" -> "total", "unit" -> "sec", "sf" -> sfDir)
+    val runFields = ListMap("prepare_sec" -> sec(prepareSec),
+      "prepare_failed" -> prepareFailed, "reps" -> repsMeasured,
+      "reps_target" -> reps, "respread_reruns" -> rerunCount,
+      "task_cpu_ratio" -> sec(contention), "steal_cores" -> sec(stealSuite),
+      "regressions_vs_recorded" -> regressions.size,
+      "regressions_pre_requeue" -> preRegressions.size,
+      "requeue_cleared" -> requeueCleared,
+      "speedups_vs_recorded" -> speedups.size,
+      "speedups_pre_requeue" -> preSpeedups.size,
+      "fast_requeue_cleared" -> fastRequeueCleared,
+      "median_inflation_vs_recorded" -> sec(medianInflation),
+      "flags_weather_attributed" -> weatherCount)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+    println(mapper.writeValueAsString(head ++ ListMap("n_queries" -> results.size,
+      "queries" -> walls(slowest), "queries_omitted" -> (results.size - slowest.size)) ++
+      runFields ++ ListMap("worst_regressions" -> flags(regressions.take(8)),
+      "octave_ledger" -> octaveNote, "full_map" -> "bench_out.json", "value" -> sec(total))))
+    val full = mapper.writeValueAsString(head ++ ListMap("queries" -> walls(results)) ++
+      runFields ++ ListMap("regressions" -> flags(regressions),
+      "speedups" -> flags(speedups),
+      "diag" -> ListMap(results.map { case (k, d) => k -> diagOf(d) }: _*),
+      "value" -> sec(total)))
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -91,25 +91,45 @@ object GraftSession {
       // hashes) exist solely for their bucketing-aware merge joins; Spark's
       // DisableUnnecessaryBucketedScan heuristic drops the bucketed read in
       // exactly those plans when the probe side's stats are unknown (a
-      // localCheckpoint boundary), reintroducing the table-side exchange
+      // Materialize leaf boundary), reintroducing the table-side exchange
       // the layout was built to avoid — measured 1.5-3× slower on q139/q143
       // at sf0.1, worse with data. No other scans are bucketed, so forcing
       // bucketed reads session-wide costs nothing.
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      // The iterative kernels (connectedComponents) rely on the context
-      // cleaner to delete RELIABLE checkpoint files once a generation's
-      // RDD is unreferenced — that cleanup is OFF by default, and without
-      // it a checkpoint-dir deployment leaks one full label-generation
-      // file per CC round for the app's lifetime. No-op under local
-      // checkpoints (this process), load-bearing wherever a production
-      // session copies these defaults and sets a checkpoint dir.
+      // Reliable Materialize leaves rely on the context cleaner to delete
+      // their checkpoint files once the leaf's RDD is unreferenced — that
+      // cleanup is OFF by default, and without it a checkpoint-dir
+      // deployment leaks every leaf (one label generation per CC round)
+      // for the app's lifetime. No-op under local checkpoints.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    muteBenignWarns()
     spark
   }
+
+  /** Loggers whose WARNs are benign by design here, raised to ERROR so the
+    * chatter does not drown a run's bounded log tail:
+    *  - `execution.window`: "No Partition Defined" — every unpartitioned
+    *    window in this repo is a bounded frame (month/day grids, a 25-row
+    *    nation rank — audited in VERDICT r09);
+    *  - `MapPartitionsRDD`: "RDD N was locally checkpointed … cannot be
+    *    recomputed after unpersisting" — a builder releases a leaf only
+    *    AFTER its successor is materialized;
+    *  - `ResolveWriteToStream`: "AQE is not supported in streaming" — AQE
+    *    is pinned session-wide and Spark turns it off per streaming query,
+    *    once per `UpsertPipeline.runOnce`. */
+  private val MutedLoggers = Seq(
+    "org.apache.spark.sql.execution.window",
+    "org.apache.spark.rdd.MapPartitionsRDD",
+    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream")
+
+  private def muteBenignWarns(): Unit =
+    try MutedLoggers.foreach(org.apache.logging.log4j.core.config.Configurator
+      .setLevel(_, org.apache.logging.log4j.Level.ERROR))
+    catch { case _: Throwable => () } // logging impl absent: keep the noise
 
   /** Split sizing of the staged-suite drivers (Bench, Verify, Profile), set
     * at runtime on top of [[build]], so the oracle checks the bench's conf.

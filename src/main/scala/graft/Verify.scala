@@ -12,7 +12,6 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    Bench.muteBenignWarns()
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (unset in the driver run): comma-separated
     // query names to dump, so one new query can be oracle-checked without

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize
 import graft.sources.Tables
 
 /** q167: BPE merge training (Sennrich et al. 2016) — learn the first k
@@ -118,78 +119,77 @@ object Bpe {
     // only occurs on the distributed path, whose cost dwarfs it.
     // cap <= 0 forces the distributed path unconditionally (the spec
     // seam), matching the CC fast path's contract.
-    val fetched =
-      if (cap > 0) vocab0.limit(cap + 1).collect() else Array.empty[org.apache.spark.sql.Row]
-    if (cap > 0 && fetched.length <= cap) {
-      var rows = fetched.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      vocab0.unpersist(blocking = false)
+    try {
+      val fetched =
+        if (cap > 0) vocab0.limit(cap + 1).collect() else Array.empty[org.apache.spark.sql.Row]
+      if (cap > 0 && fetched.length <= cap) {
+        var rows = fetched.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        val learned = Seq.newBuilder[(Int, String, String, String, Long)]
+        var exhausted = false
+        for (step <- 1 to merges if !exhausted) {
+          val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+          for ((_, w, c) <- rows) {
+            val syms = w.split(" ", -1)
+            var i = 0
+            while (i < syms.length - 1) {
+              val k = (syms(i), syms(i + 1))
+              counts.update(k, counts.getOrElse(k, 0L) + c)
+              i += 1
+            }
+          }
+          if (counts.isEmpty) exhausted = true
+          else {
+            var best: ((String, String), Long) = null
+            for ((k, v) <- counts) {
+              if (best == null || v > best._2 ||
+                (v == best._2 && (utf8Lt(k._1, best._1._1) ||
+                  (k._1 == best._1._1 && utf8Lt(k._2, best._1._2)))))
+                best = (k, v)
+            }
+            val ((a, b), n) = best
+            learned += ((step, a, b, a + b, n))
+            rows = rows.map { case (word, w, c) => (word, applyMergeLocal(w, a, b), c) }
+          }
+        }
+        return (rows.toSeq.toDF("word", "w", "c"), learned.result())
+      }
+      var vocab = vocab0
       val learned = Seq.newBuilder[(Int, String, String, String, Long)]
       var exhausted = false
       for (step <- 1 to merges if !exhausted) {
-        val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-        for ((_, w, c) <- rows) {
-          val syms = w.split(" ", -1)
-          var i = 0
-          while (i < syms.length - 1) {
-            val k = (syms(i), syms(i + 1))
-            counts.update(k, counts.getOrElse(k, 0L) + c)
-            i += 1
-          }
-        }
-        if (counts.isEmpty) exhausted = true
+        // One (pair, count) row to the driver per round — model state.
+        // Adjacent pairs as zip(symbols, symbols.tail) — slice handles the
+        // fully-merged single-symbol case with an empty array, where
+        // sequence(1, size-1) would DESCEND through [1, 0] and fabricate
+        // null pairs.
+        val tk = split($"w", " ")
+        val bestRows = vocab
+          .select(explode(zip_with(
+            slice(tk, lit(1), size(tk) - 1),
+            slice(tk, lit(2), size(tk) - 1),
+            (a, b) => struct(a.as("a"), b.as("b")))).as("p"), $"c")
+          .groupBy($"p.a", $"p.b").agg(sum($"c").as("cnt"))
+          .orderBy($"cnt".desc, $"a", $"b").limit(1)
+          .collect()
+        // Pair stream exhausted — every vocab word is already one symbol
+        // (tiny corpus, or merges > what the alphabet supports). BPE
+        // training is DONE at this point; stop cleanly with the merges
+        // learned so far rather than indexing into an empty result.
+        if (bestRows.isEmpty) exhausted = true
         else {
-          var best: ((String, String), Long) = null
-          for ((k, v) <- counts) {
-            if (best == null || v > best._2 ||
-              (v == best._2 && (utf8Lt(k._1, best._1._1) ||
-                (k._1 == best._1._1 && utf8Lt(k._2, best._1._2)))))
-              best = (k, v)
-          }
-          val ((a, b), n) = best
+          val best = bestRows(0)
+          val (a, b, n) = (best.getString(0), best.getString(1), best.getLong(2))
           learned += ((step, a, b, a + b, n))
-          rows = rows.map { case (word, w, c) => (word, applyMergeLocal(w, a, b), c) }
+          vocab = vocab.select($"word", applyMerge($"w", a, b).as("w"), $"c")
         }
       }
-      return (rows.toSeq.toDF("word", "w", "c"), learned.result())
-    }
-    var vocab = vocab0
-    val learned = Seq.newBuilder[(Int, String, String, String, Long)]
-    var exhausted = false
-    for (step <- 1 to merges if !exhausted) {
-      // One (pair, count) row to the driver per round — model state.
-      // Adjacent pairs as zip(symbols, symbols.tail) — slice handles the
-      // fully-merged single-symbol case with an empty array, where
-      // sequence(1, size-1) would DESCEND through [1, 0] and fabricate
-      // null pairs.
-      val tk = split($"w", " ")
-      val bestRows = vocab
-        .select(explode(zip_with(
-          slice(tk, lit(1), size(tk) - 1),
-          slice(tk, lit(2), size(tk) - 1),
-          (a, b) => struct(a.as("a"), b.as("b")))).as("p"), $"c")
-        .groupBy($"p.a", $"p.b").agg(sum($"c").as("cnt"))
-        .orderBy($"cnt".desc, $"a", $"b").limit(1)
-        .collect()
-      // Pair stream exhausted — every vocab word is already one symbol
-      // (tiny corpus, or merges > what the alphabet supports). BPE
-      // training is DONE at this point; stop cleanly with the merges
-      // learned so far rather than indexing into an empty result.
-      if (bestRows.isEmpty) exhausted = true
-      else {
-        val best = bestRows(0)
-        val (a, b, n) = (best.getString(0), best.getString(1), best.getLong(2))
-        learned += ((step, a, b, a + b, n))
-        vocab = vocab.select($"word", applyMerge($"w", a, b).as("w"), $"c")
-      }
-    }
-    // Checkpoint-and-free (the iterative-kernel discipline): the returned
-    // vocabulary is materialized (vocab-sized — distinct words) so the
-    // cached word-frequency table can be released NOW; without this every
-    // learnMerges call (q167, and q168's retrain) left one cached copy
-    // pinned in block storage for the session's lifetime.
-    val out = vocab.localCheckpoint()
-    vocab0.unpersist(blocking = false)
-    (out, learned.result())
+      // Checkpoint-and-free (the iterative-kernel discipline): the returned
+      // vocabulary is materialized (vocab-sized — distinct words) so the
+      // cached word-frequency table can be released NOW, on either path and
+      // on failure; without this every learnMerges call (q167, and q168's
+      // retrain) left one cached copy pinned for the session's lifetime.
+      (Materialize(vocab), learned.result())
+    } finally Materialize.release(vocab0)
   }
 
   /** q168: encode the corpus with the tokenizer q167 just learned —

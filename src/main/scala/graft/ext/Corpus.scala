@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
+import graft.ops.Materialize
 
 /** Corpus-preparation operators a training-data pipeline runs between raw
   * ingest and tokenization: deterministic split assignment, overlapping-chunk
@@ -632,20 +633,17 @@ object Corpus {
     // branch re-ran the scan+tokenize+window chain. Materialize the
     // survivors ONCE, narrowed to the columns downstream needs — exactly
     // what a real curation run does between stages (each stage WRITES its
-    // survivor set). q185's shared-leaf discipline; blocks are
-    // reference-tracked and freed once the result frame is garbage.
-    val exact = quality.withColumn("rn", row_number().over(wDup))
+    // survivor set). q185's shared-leaf discipline.
+    val exact = Materialize(quality.withColumn("rn", row_number().over(wDup))
       .filter($"rn" === 1)
-      .select($"doc_id", $"t", $"n_tok")
-      .localCheckpoint()
+      .select($"doc_id", $"t", $"n_tok"))
     // Materialized once (r18, the q189 device): the distinct span table
     // feeds the per-span doc count AND the join probe — lazy, each
     // consumer re-ran the explode + md5 + distinct over the survivors.
-    val spans = exact
+    val spans = Materialize(exact
       .select($"doc_id",
         explode(transform(Dedup.spanTexts($"t", width), t => md5(t))).as("h"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val shared = spans.groupBy($"h").agg(count(lit(1)).as("nd"))
     val novelty = spans.join(shared, Seq("h"))
       .groupBy($"doc_id")
@@ -691,15 +689,13 @@ object Corpus {
     // ONE scan for mass + language mix (r18): both are aggregates over the
     // (source, lang)-bounded table, so the per-doc token count rides the
     // same groupBy that counts languages — the separate mass scan (and its
-    // second corpus tokenize) folds away. localCheckpoint: the tiny table
-    // feeds two consumers; lazy it would re-run the corpus scan per
-    // consumer.
-    val perLang = docs
+    // second corpus tokenize) folds away. One leaf: the tiny table feeds
+    // two consumers; lazy it would re-run the corpus scan per consumer.
+    val perLang = Materialize(docs
       .select($"source", $"lang",
         size(split($"text", "\\s+")).cast("long").as("n"))
       .groupBy($"source", $"lang")
-      .agg(count(lit(1)).as("c"), sum($"n").as("nt"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c"), sum($"n").as("nt")))
     val mass = perLang
       .groupBy($"source")
       .agg(sum($"c").as("n_docs"), sum($"nt").as("n_tokens"))
@@ -715,12 +711,11 @@ object Corpus {
     // Materialized once (r18): the distinct span table feeds BOTH the
     // per-span source count and the join probe side — lazy, each consumer
     // re-ran the span explode + distinct over the corpus.
-    val spans = docs
+    val spans = Materialize(docs
       .select($"source", split($"text", "\\s+").as("t"))
       .select($"source",
         explode(transform(Dedup.spanTexts($"t", width), t => md5(t))).as("h"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val nSources = spans.groupBy($"h")
       .agg(count(lit(1)).as("ns"))
     val sharing = spans.join(nSources, Seq("h"))

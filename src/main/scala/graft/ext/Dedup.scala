@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize
 import graft.sources.Tables
 
 /** Deduplication operators for LLM training-data pipelines: exact
@@ -579,8 +580,7 @@ object Dedup {
   def verifyNearDupCandidates(candidates: DataFrame, histText: DataFrame,
                               batch: DataFrame): DataFrame = {
     import batch.sparkSession.implicits._
-    val cand = candidates
-      .localCheckpoint() // feeds the id fetch AND the verify join once
+    val cand = Materialize(candidates) // feeds the id fetch AND the verify join once
     def strSets(df: DataFrame): DataFrame =
       verifyShingleSets(df, "sh", dropSeparatorOnly = true)
     val histSets = strSets(
@@ -651,12 +651,11 @@ object Dedup {
       c < oracleWindow ||
         (c >= NearDupIdOffset && c < NearDupIdOffset + nPlanted)
     // `rawPairs` feeds several consumers (candIds, the prefilter, and/or
-    // both verify joins); localCheckpoint materializes the banding pipeline
+    // both verify joins); one leaf materializes the banding pipeline
     // once instead of re-running the signature/self-join DAG up to 3x (the
     // same measured 3x q121 documents for its candidate set).
-    val rawPairs = candidatePairs(lshBands(sigs))
-      .filter(inWindow($"left_id") && inWindow($"right_id"))
-      .localCheckpoint()
+    val rawPairs = Materialize(candidatePairs(lshBands(sigs))
+      .filter(inWindow($"left_id") && inWindow($"right_id")))
     val candIds = rawPairs.select($"left_id".as("doc_id"))
       .union(rawPairs.select($"right_id")).distinct()
     val pairs = hsLookup match {
@@ -799,14 +798,10 @@ object Dedup {
     * thousands. The loop still runs to an actual fixed point (a silent cap
     * would under-merge long chains) and throws if `maxIters` is hit
     * unconverged. Driver-loop hygiene for scale:
-    *  - each generation is checkpointed, so the plan stays O(1) tall
-    *    instead of growing one join per round (superseded generations are
-    *    freed by the context cleaner once unreferenced). When the session has
-    *    a reliable checkpoint dir configured, `checkpoint()` is used so an
-    *    executor loss mid-loop can recover from durable storage;
-    *    `localCheckpoint` (executor-block storage, no recompute path) is the
-    *    fallback for sessions without one — fine locally, set a checkpoint
-    *    dir on a real cluster with dynamic allocation;
+    *  - each generation is a [[Materialize]] leaf, so the plan stays O(1)
+    *    tall instead of growing one join per round, and the superseded
+    *    generation is released as soon as the next one is materialized
+    *    (reliable when the session has a checkpoint dir, see Materialize);
     *  - the convergence flag is computed in the SAME pass that builds the new
     *    labels (a per-row `changed` bit max-aggregated over the materialized
     *    checkpoint), not as a separate join job. */
@@ -889,63 +884,55 @@ object Dedup {
     local.getOrElse {
       // >cap (or probe disabled): distributed loop. When the probe ran, its
       // persisted projection feeds the edge build so the caller's pipeline is
-      // not recomputed; unpersisted alongside `edges` at the end.
+      // not recomputed; released with `edges` when the loop ends or throws.
       val src = probed.getOrElse(pairs)
-      val reliable = spark.sparkContext.getCheckpointDir.isDefined
-      def checkpointed(df: DataFrame): DataFrame =
-        if (reliable) df.checkpoint() else df.localCheckpoint()
       // undirected edge list, both directions
       val edges = src.select($"left_id".as("src"), $"right_id".as("dst"))
         .unionByName(src.select($"right_id".as("src"), $"left_id".as("dst")))
         .distinct().persist()
-      var labels = checkpointed(
-        edges.select($"src".as("id")).distinct().withColumn("label", col("id")))
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIters) {
-        val neighborMin = edges
-          .join(labels.withColumnRenamed("id", "dst2"), $"dst" === $"dst2")
-          .groupBy($"src").agg(min($"label").as("nbr_label"))
-        // pointer jump: my label's current label (labels are always node ids,
-        // so the self-join always resolves; left join for safety). Round 0's
-        // jump is the identity (label == id), so it starts at round 1.
-        val base = labels.join(neighborMin, $"id" === $"src", "left")
-        val joined =
-          if (i == 0) base.withColumn("jump_label", $"label")
-          else base.join(
-            labels.select($"id".as("jump_id"), $"label".as("jump_label")),
-            $"label" === $"jump_id", "left")
-        val newLabel = least($"label",
-          coalesce($"nbr_label", $"label"), coalesce($"jump_label", $"label"))
-        val next = checkpointed( // eager: the one full job this round
-          joined.select($"id", newLabel.as("label"),
-            (newLabel =!= $"label").as("changed")))
-        val maxChanged = next.agg(max($"changed")).collect().head // cached scan
-        converged = maxChanged.isNullAt(0) || !maxChanged.getBoolean(0)
-        roundProbe(i, next)
-        // `next` is materialized and lineage-truncated: the PREVIOUS
-        // generation's checkpoint blocks are now dead weight. Freeing them
-        // here bounds the loop's block-manager footprint to two generations;
-        // leaking one per iteration is an executor-memory leak on a 100 TB
-        // graph (and the measured GC-churn source at bench scale). Local
-        // checkpoints only — reliable checkpoint FILES are owned by the
-        // cleaner, and ONLY if the session enables
-        // spark.cleaner.referenceTracking.cleanCheckpoints (false by
-        // default; GraftSession sets it — a deployment with a checkpoint
-        // dir that drops that conf leaks one label-generation file per
-        // round for the app's lifetime).
-        if (!reliable)
-          org.apache.spark.sql.graftshim.checkpointRddOf(labels)
-            .foreach(_.unpersist(blocking = false))
-        labels = next.select($"id", $"label")
-        i += 1
-      }
-      edges.unpersist(blocking = false)
-      probed.foreach(_.unpersist(blocking = false))
-      if (!converged) throw new IllegalStateException(
-        s"connectedComponents: no fixed point after $maxIters rounds " +
-          "(component diameter exceeds maxIters — raise it)")
-      labels
+      try {
+        // `gen` is the current generation's leaf; `labels` its (id, label)
+        // projection. Release takes the leaf, never the projection.
+        var gen = Materialize(
+          edges.select($"src".as("id")).distinct().withColumn("label", col("id")))
+        var labels = gen
+        var converged = false
+        var i = 0
+        while (!converged && i < maxIters) {
+          val neighborMin = edges
+            .join(labels.withColumnRenamed("id", "dst2"), $"dst" === $"dst2")
+            .groupBy($"src").agg(min($"label").as("nbr_label"))
+          // pointer jump: my label's current label (labels are always node ids,
+          // so the self-join always resolves; left join for safety). Round 0's
+          // jump is the identity (label == id), so it starts at round 1.
+          val base = labels.join(neighborMin, $"id" === $"src", "left")
+          val joined =
+            if (i == 0) base.withColumn("jump_label", $"label")
+            else base.join(
+              labels.select($"id".as("jump_id"), $"label".as("jump_label")),
+              $"label" === $"jump_id", "left")
+          val newLabel = least($"label",
+            coalesce($"nbr_label", $"label"), coalesce($"jump_label", $"label"))
+          val next = Materialize( // eager: the one full job this round
+            joined.select($"id", newLabel.as("label"),
+              (newLabel =!= $"label").as("changed")))
+          val maxChanged = next.agg(max($"changed")).collect().head // cached scan
+          converged = maxChanged.isNullAt(0) || !maxChanged.getBoolean(0)
+          roundProbe(i, next)
+          // `next` is materialized and lineage-truncated: the previous
+          // generation is dead weight. Freeing it here bounds the loop's
+          // footprint to two generations; leaking one per round is an
+          // executor-memory leak on a 100 TB graph.
+          Materialize.release(gen)
+          gen = next
+          labels = next.select($"id", $"label")
+          i += 1
+        }
+        if (!converged) throw new IllegalStateException(
+          s"connectedComponents: no fixed point after $maxIters rounds " +
+            "(component diameter exceeds maxIters — raise it)")
+        labels
+      } finally Materialize.release(edges +: probed.toSeq: _*)
     }
   }
 
@@ -968,17 +955,15 @@ object Dedup {
         graft.functions.NativeKernels.shingleHashes($"text", 3).as("hs"))
       .persist()
     val sigs = hdocs.select($"doc_id", minhashSignature($"hs").as("sig"))
-    val pairs = candidatePairs(lshBands(sigs))
+    // Result-sized leaf (eager): lets the corpus-wide cache release NOW
+    // instead of leaking in the block manager for the session's lifetime.
+    try Materialize(candidatePairs(lshBands(sigs))
       .join(hdocs.select($"doc_id".as("left_id"), $"hs".as("ls")), "left_id")
       .join(hdocs.select($"doc_id".as("right_id"), $"hs".as("rs")), "right_id")
       .withColumn("jaccard", round(jaccard($"ls", $"rs"), 6))
       .filter($"jaccard" >= t)
-      .select($"left_id", $"right_id", $"jaccard")
-      // Result-sized leaf (eager): lets the corpus-wide cache release NOW
-      // instead of leaking in the block manager for the session's lifetime.
-      .localCheckpoint()
-    hdocs.unpersist(blocking = false)
-    pairs
+      .select($"left_id", $"right_id", $"jaccard"))
+    finally Materialize.release(hdocs)
   }
 
   def q62NearDupCorpus(spark: SparkSession, dir: String): DataFrame = {
@@ -1134,7 +1119,7 @@ object Dedup {
     // 590 tasks / 24 stages per rep). The checkpointed leaf is the
     // signature table a production pipeline materializes once per corpus;
     // freed below as soon as its last consumer (surv) is materialized.
-    val hsets = corpus
+    val hsets = Materialize(corpus
       .select($"doc_id",
         // the kernel's LinkedHashSet already emits DISTINCT hashes — no
         // array_distinct pass needed on top
@@ -1147,8 +1132,7 @@ object Dedup {
       // count (shuffle-free coalesce; scale-adaptive, not a local constant:
       // a cluster coalesces its many scan splits to ITS total cores, which
       // also keeps the kernel pass fully parallel).
-      .coalesce(spark.sparkContext.defaultParallelism)
-      .localCheckpoint()
+      .coalesce(spark.sparkContext.defaultParallelism))
     // Reused frames are persisted: tokens feeds the df count AND the rank
     // join's probe side (re-exploding the 64× leaf twice measured ~+2-3 s
     // at the data octave — the columnar cache pays for itself as data
@@ -1167,8 +1151,8 @@ object Dedup {
     // lists plus the probe side), and broadcast subtrees are computed on
     // separate driver threads — against a lazy plan they race to recompute
     // the whole prefix chain concurrently (measured 3× the runtime).
-    // localCheckpoint truncates the lineage to a materialized leaf (the CC
-    // loop's trick), after which everything upstream can go.
+    // The leaf truncates the lineage, after which tokens and prefix can go
+    // (in `finally`, so a failing build leaves neither pinned).
     // Asymmetric candidate join (PPJoin's indexing scheme): for a pair with
     // |X| ≥ |Y| (ties broken by doc_id), the required overlap is at least
     // ⌈2t/(1+t)·|Y|⌉, so the globally-first shared token must sit within
@@ -1181,36 +1165,35 @@ object Dedup {
     // shrink correspondingly. The 1e-6 ceil slack: an FP product landing
     // a hair ABOVE an exact integer would otherwise round the requirement
     // up and shorten the prefix below its sound length.
-    val indexPrefix = prefix
-      .filter($"pos" <= $"sz" - ceil(lit(2.0 * t / (1.0 + t)) * $"sz" - lit(1e-6)) + 1)
-    val cand = prefix.select($"h", $"doc_id".as("x_id"), $"sz".as("szx"), $"pos".as("px"))
-      .join(indexPrefix.select($"h", $"doc_id".as("y_id"), $"sz".as("szy"), $"pos".as("py")), "h")
-      // Role order (probe strictly larger by (sz, id)) both de-duplicates
-      // the unordered pair and makes the short index prefix sound.
-      .filter($"szx" > $"szy" || ($"szx" === $"szy" && $"x_id" > $"y_id"))
-      // PPJoin length filter: J ≥ t forces t·|X| ≤ |Y| ≤ |X| here, so
-      // size-mismatched candidates drop before the distinct + verify.
-      .filter($"szy" >= ceil(lit(t) * $"szx" - lit(1e-6)))
-      // PPJoin positional filter. Both docs are sorted in the SAME global
-      // (df, h) order, so for the globally-first shared token — positions
-      // (px, py) — every other shared token sits strictly after px in X AND
-      // after py in Y: overlap ≤ 1 + min(szx−px, szy−py). J ≥ t needs
-      // overlap ≥ t/(1+t)·(szx+szy) (from |X∩Y|·(1+t) ≥ t·(|X|+|Y|)), so
-      // rows that cannot reach that bound drop BEFORE the shuffle/distinct.
-      // Per-row form ≡ pair-level form at the min-position row: shared-token
-      // positions increase jointly, so a pair's first-token row carries the
-      // pair's maximal bound — it survives iff the pair does, and later rows
-      // of surviving pairs are (correctly) free to drop too. The 1e-6 slack
-      // keeps ceil from rounding an FP-exact integer UP (which would
-      // overstate the requirement and prune a qualifying pair).
-      .filter(lit(1) + least($"szx" - $"px", $"szy" - $"py")
-        >= ceil(lit(t / (1.0 + t)) * ($"szx" + $"szy") - lit(1e-6)))
-      .select(least($"x_id", $"y_id").as("a_id"),
-        greatest($"x_id", $"y_id").as("b_id"))
-      .distinct()
-      .localCheckpoint()
-    tokens.unpersist(blocking = false)
-    prefix.unpersist(blocking = false)
+    val cand = try {
+      val indexPrefix = prefix
+        .filter($"pos" <= $"sz" - ceil(lit(2.0 * t / (1.0 + t)) * $"sz" - lit(1e-6)) + 1)
+      Materialize(prefix.select($"h", $"doc_id".as("x_id"), $"sz".as("szx"), $"pos".as("px"))
+        .join(indexPrefix.select($"h", $"doc_id".as("y_id"), $"sz".as("szy"), $"pos".as("py")), "h")
+        // Role order (probe strictly larger by (sz, id)) both de-duplicates
+        // the unordered pair and makes the short index prefix sound.
+        .filter($"szx" > $"szy" || ($"szx" === $"szy" && $"x_id" > $"y_id"))
+        // PPJoin length filter: J ≥ t forces t·|X| ≤ |Y| ≤ |X| here, so
+        // size-mismatched candidates drop before the distinct + verify.
+        .filter($"szy" >= ceil(lit(t) * $"szx" - lit(1e-6)))
+        // PPJoin positional filter. Both docs are sorted in the SAME global
+        // (df, h) order, so for the globally-first shared token — positions
+        // (px, py) — every other shared token sits strictly after px in X AND
+        // after py in Y: overlap ≤ 1 + min(szx−px, szy−py). J ≥ t needs
+        // overlap ≥ t/(1+t)·(szx+szy) (from |X∩Y|·(1+t) ≥ t·(|X|+|Y|)), so
+        // rows that cannot reach that bound drop BEFORE the shuffle/distinct.
+        // Per-row form ≡ pair-level form at the min-position row: shared-token
+        // positions increase jointly, so a pair's first-token row carries the
+        // pair's maximal bound — it survives iff the pair does, and later rows
+        // of surviving pairs are (correctly) free to drop too. The 1e-6 slack
+        // keeps ceil from rounding an FP-exact integer UP (which would
+        // overstate the requirement and prune a qualifying pair).
+        .filter(lit(1) + least($"szx" - $"px", $"szy" - $"py")
+          >= ceil(lit(t / (1.0 + t)) * ($"szx" + $"szy") - lit(1e-6)))
+        .select(least($"x_id", $"y_id").as("a_id"),
+          greatest($"x_id", $"y_id").as("b_id"))
+        .distinct())
+    } finally Materialize.release(tokens, prefix)
     // Hash-set prefilter before the string verify (q143's drift argument,
     // wider margin): a true pair has J_string ≥ t = 0.5, and hash-set vs
     // string-set jaccard drift is bounded by 31-bit collision mass
@@ -1230,20 +1213,17 @@ object Dedup {
     // costs two extra corpus-array passes (part of a measured +10 s 64×
     // regression in the leaf-re-derivation variant); one materialization
     // amortizes them, and the upstream kernel still runs ONCE (hsets).
-    val hsorted = hsets.select($"doc_id", sort_array($"hs").as("hss"))
-      .localCheckpoint()
+    val hsorted = Materialize(hsets.select($"doc_id", sort_array($"hs").as("hss")))
     // hsorted's eager checkpoint was the hash leaf's last consumer — free
     // the corpus-wide blocks now (everything downstream reads hsorted,
     // corpus, or candIds, not hsets).
-    org.apache.spark.sql.graftshim.checkpointRddOf(hsets)
-      .foreach(_.unpersist(blocking = false))
-    val surv = cand
+    Materialize.release(hsets)
+    val surv = Materialize(cand // referenced by candIds (twice) and the verify join
       .join(hsorted.select($"doc_id".as("a_id"), $"hss".as("ha")), "a_id")
       .join(hsorted.select($"doc_id".as("b_id"), $"hss".as("hb")), "b_id")
       .filter(graft.functions.NativeKernels.jaccardSortedLongs($"ha", $"hb")
         >= lit(t) - lit(0.05))
-      .select($"a_id", $"b_id")
-      .localCheckpoint() // referenced by candIds (twice) and the verify join
+      .select($"a_id", $"b_id"))
     // Exact verify on TRUE string shingle sets, derived only for surviving
     // documents (near-dups + bounded collision mass — never N²), so the
     // result is bit-equal to the quadratic string-set oracle. Tokenization
@@ -1259,27 +1239,22 @@ object Dedup {
     // exclude zero-token docs, so the shared projection's optional
     // all-separator filter would be a scan-wide regex ruling nothing out
     // (see verifyShingleSets).
-    val vsets = verifyShingleSets(corpus.join(candIds, "doc_id"), "toks",
-        dropSeparatorOnly = false)
-      .localCheckpoint()
-    val verified = surv
+    val vsets = Materialize(verifyShingleSets(corpus.join(candIds, "doc_id"), "toks",
+        dropSeparatorOnly = false))
+    val verified = Materialize(surv
       .join(vsets.select($"doc_id".as("a_id"), $"toks".as("ta")), "a_id")
       .join(vsets.select($"doc_id".as("b_id"), $"toks".as("tb")), "b_id")
       .withColumn("inter", size(array_intersect($"ta", $"tb")))
       .withColumn("jaccard", round($"inter".cast("double")
         / (size($"ta") + size($"tb") - $"inter"), 6))
       .filter($"jaccard" >= t)
-      .select($"a_id", $"b_id", $"jaccard")
       // The verified-pair set is result-sized (tiny); pin it so the final
       // orderBy's range-partitioner sampling pass doesn't execute the
       // candidate-verify join a second time.
-      .localCheckpoint()
-    // Dataset.unpersist is a NO-OP on a localCheckpointed frame (its blocks
-    // live outside the CacheManager) — free the checkpoint RDD itself, the
-    // same idiom as connectedComponents and q185. `cand` is the 125k-pair
-    // candidate set at sf0.1, the largest intermediate this pipeline pins.
-    org.apache.spark.sql.graftshim.checkpointRddOf(cand)
-      .foreach(_.unpersist(blocking = false))
+      .select($"a_id", $"b_id", $"jaccard"))
+    // `cand` is the 125k-pair candidate set at sf0.1, the largest
+    // intermediate this pipeline pins.
+    Materialize.release(cand)
     verified
   }
 
@@ -1484,7 +1459,7 @@ object Dedup {
     // One span derivation feeds BOTH paths (the sketch and the exact audit
     // baseline): without the shared leaf the tokenize + per-span md5 pass
     // ran twice.
-    val spans = sourceSpans(spark, dir, width).localCheckpoint()
+    val spans = Materialize(sourceSpans(spark, dir, width))
     // The k-component pass is ONE native-kernel call per span (all k MD5s
     // in a generated-code loop, digest bytes → u32 directly) folded by the
     // elementwise-min aggregator — bit-identical to the SQL form
@@ -1496,12 +1471,11 @@ object Dedup {
     // pass once, not once per side.
     val vecMin = udaf(new graft.functions.VecSumAggregator.VecMin,
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())
-    val comps = spans
+    val comps = Materialize(spans
       .select($"source",
         graft.functions.NativeKernels.md5U32Components($"h", k).as("vc"))
       .groupBy($"source").agg(vecMin($"vc").as("mvs"))
-      .select($"source", posexplode($"mvs").as(Seq("j", "mv")))
-      .localCheckpoint()
+      .select($"source", posexplode($"mvs").as(Seq("j", "mv"))))
     val est = comps.as("a")
       .join(comps.as("b"),
         $"a.j" === $"b.j" && $"a.source" < $"b.source")
@@ -1509,19 +1483,16 @@ object Dedup {
       .agg(sum(when($"a.mv" === $"b.mv", 1L).otherwise(0L)).as("matches"))
       .select($"source_a", $"source_b", $"matches",
         round($"matches".cast("double") / k, 6).as("est_jaccard"))
-    val result = overlapFromSpans(spans)
+    // Result-sized leaf (eager, ≤ sources² rows): lets both upstream
+    // leaves release NOW — repeated invocations in one session (bench
+    // reps) must not accumulate dead blocks in the block manager.
+    val result = Materialize(overlapFromSpans(spans)
       .join(broadcast(est), Seq("source_a", "source_b"))
       .select($"source_a", $"source_b", $"inter_spans", $"jaccard",
         $"matches", $"est_jaccard",
         round(abs($"est_jaccard" - $"jaccard"), 6).as("abs_err"))
-      .orderBy($"source_a", $"source_b")
-      // Result-sized leaf (eager, ≤ sources² rows): lets both upstream
-      // checkpoints release NOW — repeated invocations in one session
-      // (bench reps) must not accumulate dead blocks in the block manager.
-      .localCheckpoint()
-    for (df <- Seq(spans, comps))
-      org.apache.spark.sql.graftshim.checkpointRddOf(df)
-        .foreach(_.unpersist(blocking = false))
+      .orderBy($"source_a", $"source_b"))
+    Materialize.release(spans, comps)
     result
   }
 
@@ -1543,12 +1514,11 @@ object Dedup {
     import spark.implicits._
     // Materialized once (r18, the q189/q200 device): the span table feeds
     // the per-hash doc count AND the join probe.
-    val spans = Tables.documents(spark, dir)
+    val spans = Materialize(Tables.documents(spark, dir)
       .select($"doc_id", split($"text", "\\s+").as("t"))
       .select($"doc_id",
         explode(transform(spanTexts($"t", width), t => md5(t))).as("h"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val shared = spans.groupBy($"h")
       .agg(count(lit(1)).as("n_docs_with"))
     spans
@@ -1598,7 +1568,7 @@ object Dedup {
     // Materialized once (r18, the q189/q200 device): overlapFromSpans
     // consumes the span table twice (per-source totals + the pair path);
     // lazy, each consumer re-ran the corpus explode + md5 + distinct.
-    overlapFromSpans(sourceSpans(spark, dir, width).localCheckpoint(), topN)
+    overlapFromSpans(Materialize(sourceSpans(spark, dir, width)), topN)
 
   /** The q165 exact pairwise overlap matrix over a prebuilt span frame. */
   def overlapFromSpans(spans: DataFrame, topN: Int = 20): DataFrame = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
+import graft.ops.Materialize
 
 /** Corpus quality-control operators the big training-data pipelines run
   * after dedup and before tokenization: statistical language-model scoring
@@ -370,13 +371,12 @@ object Quality {
     // one scan, one bigram-keyed shuffle, and every model table plus the
     // holdout scoring derives from the bounded count table (weighting each
     // distinct bigram's fp by n — exact integer arithmetic, bit-identical
-    // to the per-occurrence sum). localCheckpoint: four consumers,
-    // broadcast subtrees race a lazy plan (the q121 device).
-    val bc = docs.select($"split",
+    // to the per-occurrence sum). One leaf: four consumers, broadcast
+    // subtrees race a lazy plan (the q121 device).
+    val bc = Materialize(docs.select($"split",
         explode(expr(bigramStructs("tk"))).as("b"))
       .groupBy($"split", $"b.w1".as("w1"), $"b.w2".as("w2"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("n")))
     val train = bc.filter($"split" === "train")
     val cuni = train.groupBy($"w1").agg(sum($"n").as("c1"))
     val cbi = train.select($"w1", $"w2", $"n".as("c12"))
@@ -430,16 +430,15 @@ object Quality {
     // shuffle: the model tables derive from the SAME (doc, term) count
     // table (one scan total) and scoring weights each distinct pair's fp
     // by n — exact integer arithmetic, bit-identical to the
-    // per-occurrence sum. localCheckpoint: three consumers, broadcast
-    // subtrees race a lazy plan (the q121 device).
-    val dt = Tables.documents(spark, dir)
+    // per-occurrence sum. One leaf: three consumers, broadcast subtrees
+    // race a lazy plan (the q121 device).
+    val dt = Materialize(Tables.documents(spark, dir)
       .select($"doc_id", ($"source" === targetSource).as("is_target"),
         explode(
           expr("filter(split(lower(text), '[^a-z]+'), x -> x <> '')"))
           .as("term"))
       .groupBy($"doc_id", $"is_target", $"term")
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("n")))
     val counts = dt.groupBy($"term").agg(
       sum(when($"is_target", $"n").otherwise(0L)).as("ct"),
       sum(when(!$"is_target", $"n").otherwise(0L)).as("cr"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.VectorOps
+import graft.ops.Materialize
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, 64-dim).
   *
@@ -593,14 +594,13 @@ object Similarity {
     * count, and the required TRUEs. */
   def q149AnnRecallFloors(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Eager localCheckpoint, not cache(): `exact` feeds eight sub-plans
-    // (each method row uses it twice), but this function returns a lazy
-    // frame, so a cache() would linger registered on the session forever
-    // (the ADVICE-r11 anti-pattern). The checkpoint materializes 40 rows
-    // eagerly and its blocks are reference-tracked — freed once the
+    // An eager leaf, not cache(): `exact` feeds eight sub-plans (each
+    // method row uses it twice), but this function returns a lazy frame,
+    // so a cache() would linger registered on the session forever (the
+    // ADVICE-r11 anti-pattern). The leaf is 40 rows, freed once the
     // returned frame is garbage.
-    val exact = q37TopKBruteForce(spark, dir)
-      .select($"query_id", $"neighbor_id").localCheckpoint()
+    val exact = Materialize(q37TopKBruteForce(spark, dir)
+      .select($"query_id", $"neighbor_id"))
     def row(method: String, ann: DataFrame, floor: Double): DataFrame = {
       // Both sides are k·nQueries rows, but the estimator can't see that
       // through the ranking pipelines — hint the ANN side so the hit count

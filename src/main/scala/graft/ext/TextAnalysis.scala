@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.functions.RollingHash
+import graft.ops.Materialize
 
 /** Text-analysis operators for LLM training-data pipelines over the
   * `documents` table: token counting, quality scoring, n-gram language ID,
@@ -237,12 +238,12 @@ object TextAnalysis {
     // ONE corpus tokenize (r19): the vector table has four consumers (both
     // norm2 uses, the broadcast query side, the join probe side), and a lazy
     // plan re-ran the tokenize+hash+aggregate chain for each — the before
-    // plan shows 8 parquet scans / 24 Exchanges. localCheckpoint the bounded
+    // plan shows 8 parquet scans / 24 Exchanges. Materialize the bounded
     // (doc, bucket, c) table once (≤ docs×dim rows — the materialized
     // feature table a production retrieval layer stores anyway); every
     // consumer, including both norm2 aggregates, derives from the leaf.
     // The q121/q198 device; values and oracle unchanged.
-    val vec = hashedBow(Tables.documents(spark, dir), dim).localCheckpoint()
+    val vec = Materialize(hashedBow(Tables.documents(spark, dir), dim))
     val norm2 = vec.groupBy($"doc_id").agg(sum($"c" * $"c").as("n2"))
     val q = vec.filter($"doc_id" < nQueries)
       .select($"doc_id".as("query_id"), $"bucket", $"c".as("cq"))

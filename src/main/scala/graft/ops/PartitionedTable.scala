@@ -172,9 +172,8 @@ object PartitionedTable {
       // this method's idempotence contract. A keyed warehouse row with a
       // null key is unaddressable by definition; producers that need such
       // rows key them with a sentinel.
-      updates.filter(keys.map(col(_).isNotNull).reduce(_ && _))
-        .withColumn(BucketCol, bucketExpr(keys, nBuckets))
-        .localCheckpoint()
+      Materialize(updates.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+        .withColumn(BucketCol, bucketExpr(keys, nBuckets)))
     }
     // Touched-bucket set: ≤ nBuckets ints, driver-bounded by construction.
     val touched = graft.JobStage.named(spark, "partitioned-table: touched-bucket collect") {
@@ -184,13 +183,12 @@ object PartitionedTable {
     val target = spark.read.parquet(root)
       .filter(col(BucketCol).isin(touched.map(Integer.valueOf).toIndexedSeq: _*))
     val merged = graft.JobStage.named(spark, s"partitioned-table: merge ${touched.length} touched buckets") {
-      Merge.upsert(target, up.select(target.columns.map(col): _*), keys)
-        // Materialization barrier (bounded by the touched partitions): the
-        // overwrite below replaces the very files the merge reads, so the
-        // result must exist before the first old file is deleted — and a
-        // lineage-truncated frame is also what lets Spark accept a write
-        // onto a path the original plan scanned.
-        .localCheckpoint()
+      // Materialization barrier (bounded by the touched partitions): the
+      // overwrite below replaces the very files the merge reads, so the
+      // result must exist before the first old file is deleted — and a
+      // lineage-truncated frame is also what lets Spark accept a write
+      // onto a path the original plan scanned.
+      Materialize(Merge.upsert(target, up.select(target.columns.map(col): _*), keys))
     }
     graft.JobStage.named(spark, s"partitioned-table: dynamic overwrite ${touched.length} buckets") {
       merged

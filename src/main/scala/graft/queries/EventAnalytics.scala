@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.ops.Materialize
 
 /** Event-pipeline analytics over the events stream table: funnel conversion
   * and weekly retention — the queries a product/event warehouse answers
@@ -225,9 +226,8 @@ object EventAnalytics {
     // Pinned: both the grid branch and the explode branch read this frame,
     // and without the checkpoint each consumer re-runs the events-wide
     // distinct shuffle (the dominant cost) from scratch.
-    val ud = Tables.events(spark, dir)
-      .select($"user_id", to_date($"ts").as("day")).distinct()
-      .localCheckpoint()
+    val ud = Materialize(Tables.events(spark, dir)
+      .select($"user_id", to_date($"ts").as("day")).distinct())
     val grid = ud.select($"day".as("grid_day")).distinct()
     ud.withColumn("grid_day",
         explode(expr("sequence(day, date_add(day, 6))")))
@@ -251,10 +251,9 @@ object EventAnalytics {
     import spark.implicits._
     // Pinned for the same reason as q135's ud: the grid branch and the
     // explode branch would each re-run the events-wide sketch aggregation.
-    val daily = Tables.events(spark, dir)
+    val daily = Materialize(Tables.events(spark, dir)
       .groupBy(to_date($"ts").as("day"))
-      .agg(hll_sketch_agg($"user_id", lit(14)).as("sk"))
-      .localCheckpoint()
+      .agg(hll_sketch_agg($"user_id", lit(14)).as("sk")))
     val grid = daily.select($"day".as("grid_day"))
     daily
       .withColumn("grid_day",

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.ops.Materialize
 import graft.sources.Tables
 
 /** Round-4 query surface: interval-range window frames, TF-IDF scoring,
@@ -620,7 +621,7 @@ object Extra {
     * scale-free-ish DAG whose hubs are the small ids. Three damped
     * iterations (d = 0.85), each a join + re-aggregation — the standard
     * distributed formulation (no driver-side state; at depth >> 3 add
-    * `localCheckpoint` per generation exactly as the CC loop does).
+    * a `Materialize` leaf per generation exactly as the CC loop does).
     *
     * All arithmetic is integer fixed-point at scale 1e9 (`div`, matching
     * DuckDB `//` on positives), so the DuckDB oracle — the same three
@@ -761,8 +762,8 @@ object Extra {
         .agg(collect_set($"l_partkey".cast("long")).as("items"))
     // The basket table feeds three sinks (n_orders, item supports, the
     // pair expansion) and the pruned pipeline materializes inside this
-    // call (localCheckpoint + guard count below) — cache it and drop the
-    // cache before returning. The minSupport<=1 path stays UNcached: it
+    // call (the candidate leaf + guard count below) — cache it and drop the
+    // cache before returning, or when that materialization throws. The minSupport<=1 path stays UNcached: it
     // returns a lazy plan, so a cache would linger unpersisted.
     val full = if (minSupport <= 1L) baskets(flat) else baskets(flat).cache()
     val nOrders = full.agg(count(lit(1)).as("n_orders"))
@@ -821,31 +822,31 @@ object Extra {
     // pushdown is FOR (most items in one basket only) still takes the
     // pruned branch, where the join pays for itself by shrinking the
     // superlinear pair mass.
-    val statsRow = itemN.agg(
-      sum(when($"n_item" < minSupport, 1L).otherwise(0L)).as("n_infrequent"),
-      min($"l_partkey").as("min_k"), max($"l_partkey").as("max_k")).collect().head
-    val nInfrequent = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
-    // A/B seam: spark.graft.q122.packedPairs=false forces the struct path
-    // (measurement tooling; the stats guard is the production decision).
-    val packed = spark.conf.get("spark.graft.q122.packedPairs", "auto") != "false" &&
-      !statsRow.isNullAt(1) && statsRow.getLong(1) >= 0L &&
-      statsRow.getLong(2) <= 0xFFFFFFFFL
-    // Result-sized leaf: the exactness guard reads it here AND the caller
-    // materializes it — without the checkpoint the pipeline would execute
-    // twice.
-    val candidate = (if (nInfrequent == 0L) report(full, minSupport, packed)
-      else {
-        val frequent = itemN.filter($"n_item" >= minSupport).select($"l_partkey")
-        report(baskets(flat.join(frequent, "l_partkey")), minSupport, packed)
-      }).localCheckpoint()
-    // Exactness guard: the minAb floor already guarantees every surviving
-    // row has n_ab >= minSupport, so a FULL top-K means no pruned-away
-    // (necessarily sub-threshold) pair could have placed — only a short
-    // result can hide one, and that falls back to the unpruned expansion.
-    val out = if (candidate.count() >= topK) candidate
-              else report(full, 1L, packed).localCheckpoint()
-    full.unpersist(blocking = false)
-    out
+    try {
+      val statsRow = itemN.agg(
+        sum(when($"n_item" < minSupport, 1L).otherwise(0L)).as("n_infrequent"),
+        min($"l_partkey").as("min_k"), max($"l_partkey").as("max_k")).collect().head
+      val nInfrequent = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
+      // A/B seam: spark.graft.q122.packedPairs=false forces the struct path
+      // (measurement tooling; the stats guard is the production decision).
+      val packed = spark.conf.get("spark.graft.q122.packedPairs", "auto") != "false" &&
+        !statsRow.isNullAt(1) && statsRow.getLong(1) >= 0L &&
+        statsRow.getLong(2) <= 0xFFFFFFFFL
+      // Result-sized leaf: the exactness guard reads it here AND the caller
+      // materializes it — without the checkpoint the pipeline would execute
+      // twice.
+      val candidate = Materialize(if (nInfrequent == 0L) report(full, minSupport, packed)
+        else {
+          val frequent = itemN.filter($"n_item" >= minSupport).select($"l_partkey")
+          report(baskets(flat.join(frequent, "l_partkey")), minSupport, packed)
+        })
+      // Exactness guard: the minAb floor already guarantees every surviving
+      // row has n_ab >= minSupport, so a FULL top-K means no pruned-away
+      // (necessarily sub-threshold) pair could have placed — only a short
+      // result can hide one, and that falls back to the unpruned expansion.
+      if (candidate.count() >= topK) candidate
+      else Materialize(report(full, 1L, packed))
+    } finally Materialize.release(full)
   }
 
   /** q124: key-skew profile — the distribution report a shuffle planner (or

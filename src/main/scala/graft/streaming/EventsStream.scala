@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import graft.ops.Materialize
 
 /** Structured Streaming superset of the reference's event-driven micro-batch
   * pipeline (SURVEY.md §2 O1): file-arrival source → event-time windowed
@@ -48,8 +49,7 @@ object EventsStream {
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
       .agg(count(lit(1)).as("n_events"), round(sum($"value"), 2).as("sum_value"))
-    val q = startPinned(spark, pinnedPartitionsFor(spark, watchDir),
-        noSettle = true) {
+    val q = startPinned(spark, pinnedPartitionsFor(spark, watchDir)) {
       stream.writeStream
         .outputMode("complete")
         .format("memory")
@@ -68,16 +68,14 @@ object EventsStream {
     * lineage-truncated frame and DROP the sink's temp view: each run
     * registers a uniquely-named view holding its full result set in driver
     * memory, and without the drop every invocation (bench reps, sweeps)
-    * leaks one more result-sized copy for the session's lifetime. The
-    * checkpoint blocks are reference-tracked — freed once the returned
-    * frame is garbage. */
+    * leaks one more result-sized copy for the session's lifetime. */
   private def drainMemorySink(spark: SparkSession, name: String)
                              (shape: DataFrame => DataFrame): DataFrame =
     // finally, not success-path-only: if shape() or the checkpoint throws,
     // leaving the view registered pins the full result set in driver
     // memory for the session's lifetime — the exact leak this drain exists
     // to prevent, just on the failure path.
-    try shape(spark.table(name)).localCheckpoint()
+    try Materialize(shape(spark.table(name)))
     finally spark.catalog.dropTempView(name)
 
   /** Start a stateful run-once query with its shuffle partitioning pinned
@@ -111,9 +109,6 @@ object EventsStream {
     * a per-job profile measured 0.3-0.8 s of state-store commit + planning per
     * settling batch):
     *
-    *  - complete-mode aggregations (q23, q82): every trigger emits the full
-    *    result; the settling batch recomputes the identical table after the
-    *    last data batch — pure overhead.
     *  - append-mode dedup (q157) and update-mode MV maintenance (q162):
     *    `dropDuplicatesWithinWatermark` emits rows in the batch they
     *    arrive; the settling batch exists only to EVICT state (and, update
@@ -122,7 +117,9 @@ object EventsStream {
     *
     * q134 (stream-stream LEFT OUTER) must KEEP the settling batch: the
     * withheld outer-null rows are emitted exactly when the watermark passes
-    * their window — that emission IS the settling batch's output. A
+    * their window — that emission IS the settling batch's output. The
+    * complete-mode aggregations (q23, q82) need no pin: their state save
+    * never asks for a data-less batch (same task counts either way). A
     * continuous production deployment keeps the default on any watermark-
     * acting pipeline; this knob is the run-once replay's economy, applied
     * query-by-query with the dependence argument written next to it. */
@@ -186,8 +183,7 @@ object EventsStream {
       // the plain 30-minute gap is exact.
       .groupBy(session_window($"ts", "30 minutes").as("w"), $"user_id")
       .agg(count(lit(1)).as("n_events"), round(sum($"value"), 2).as("sum_value"))
-    val q = startPinned(spark, pinnedPartitionsFor(spark, watchDir),
-        noSettle = true) {
+    val q = startPinned(spark, pinnedPartitionsFor(spark, watchDir)) {
       stream.writeStream
         .outputMode("complete")
         .option("checkpointLocation",

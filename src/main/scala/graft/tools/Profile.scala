@@ -41,7 +41,6 @@ object Profile {
     (xconf.get("spark.sql.shuffle.partitions").map(_ => graft.Tuning.EnabledKey -> "false") ++
       xconf).foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.setLogLevel("ERROR")
-    graft.Bench.muteBenignWarns()
     val l = new MetricsListener
     spark.sparkContext.addSparkListener(l)
     val batches = new java.util.concurrent.ConcurrentLinkedQueue[

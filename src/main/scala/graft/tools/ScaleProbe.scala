@@ -400,35 +400,11 @@ object ScaleProbe {
       val OctaveMinDeltaSec = 1.0
       def j(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
       val recPath = sys.env.getOrElse("SPARK_GRAFT_OCTAVE_BASELINE", "OCTAVE_BASELINE.json")
+      // A missing replica count reads as 0: no comparable ledger.
       val recorded: (Int, Map[String, Double]) = try {
-        val p = java.nio.file.Paths.get(recPath)
-        if (!java.nio.file.Files.exists(p)) (0, Map.empty)
-        else {
-          import org.json4s._
-          val doc = org.json4s.jackson.JsonMethods.parse(new String(
-            java.nio.file.Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8))
-          // JInt/JDouble/JDecimal — the same matcher set Bench.scala's
-          // octaveNote reader uses. A ledger writer that serializes the
-          // replica count as a decimal would otherwise read as replicas=0
-          // here and silently disable the gate as "no comparable ledger".
-          val reps = (doc \ "_meta" \ "replicas") match {
-            case JInt(n) => n.toInt
-            case JDouble(n) => n.toInt
-            case JDecimal(n) => n.toInt
-            case _ => 0
-          }
-          val m = (doc \ "queries") match {
-            case JObject(fields) => fields.collect {
-              case (k, o: JObject) => (o \ "ratio") match {
-                case JDouble(v) => Some(k -> v)
-                case JInt(v) => Some(k -> v.toDouble)
-                case JDecimal(v) => Some(k -> v.toDouble)
-                case _ => None
-              }
-            }.flatten.toMap
-            case _ => Map.empty[String, Double]
-          }
-          (reps, m)
+        Ledger.read(recPath).fold((0, Map.empty[String, Double])) { doc =>
+          (Ledger.num(doc.path("_meta").path("replicas")).fold(0)(_.toInt),
+            Ledger.nums(doc.path("queries"), _.path("ratio")))
         }
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[octave] ledger $recPath unreadable: ${e.getMessage}")
@@ -449,10 +425,9 @@ object ScaleProbe {
         s"(factor $OctaveFactor, floor ${OctaveMinDeltaSec}s, ${sweep.size} queries)")
       else println(s"[octave] no comparable ledger at $recPath for replicas=$replicas " +
         s"(recorded replicas=${recorded._1}) — ledger compare skipped")
-      // JSON-escape every interpolated string (same escape Bench.scala
-      // applies to octaveNote): base_dir is operator-chosen and query keys
-      // reach here from args — a quote or backslash in either would emit
-      // a document the downstream ledger tooling can't parse.
+      // JSON-escape every interpolated string: base_dir is operator-chosen
+      // and query keys reach here from args — a quote or backslash in
+      // either would emit a document the ledger tooling can't parse.
       def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
       val rows = sweep.map { case (q, (t1, t8)) =>
         s""""${esc(q)}":{"base":${j(t1)},"big":${j(t8)},"ratio":${j(t8 / math.max(t1, 0.05))}}"""
@@ -485,7 +460,7 @@ object ScaleProbe {
         // A caller-supplied roundProbe makes connectedComponents take the
         // distributed loop (the fast path steps aside for observation).
         graft.ext.Dedup.connectedComponents(pairs, roundProbe = (i, next) => {
-          val bytes = org.apache.spark.sql.graftshim.checkpointRddOf(next)
+          val bytes = graft.ops.Materialize.leafRdd(next)
             .flatMap(r => spark.sparkContext.getRDDStorageInfo.find(_.id == r.id))
             .map(si => si.memSize + si.diskSize).getOrElse(-1L)
           val rows = next.count() // cached scan, probe-only

@@ -35,15 +35,6 @@ package object graftshim {
                  plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan) // verified Spark 4.1.2
 
-  /** The cached RDD backing a `localCheckpoint()`ed Dataset (its analyzed
-    * plan is/contains a LogicalRDD). Lets iterative kernels unpersist a
-    * superseded checkpoint generation instead of leaking one block set per
-    * iteration until JVM exit. */
-  def checkpointRddOf(df: Dataset[_]): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    } // verified Spark 4.1.2
-
   /** Append a planner strategy to the live session (idempotent). */
   def addStrategy(spark: SparkSession,
                   strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {

@@ -342,6 +342,35 @@ class ExtSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
+  test("minhash near-dup pairs: a failing build releases its persisted hash table") {
+    import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
+    // Range-sourced for the same reason as the CC probe test above.
+    val corpus = spark.range(0, 40).select(col("id").as("doc_id"),
+      when(col("id") === 7L, raise_error(lit("corpus read failed")))
+        .otherwise(concat(lit("shared body of text number "), col("id").cast("string")))
+        .as("text"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](Dedup.minhashNearDupPairs(corpus))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("with a checkpoint dir, q121's leaves are reliable: losing every block it pinned " +
+    "leaves the result intact") {
+    val q121 = SparkEntry.queries("q121_setsim_join")
+    val expected = q121(spark, sf0001).collect().map(_.toString).sorted
+    val sc = spark.sparkContext
+    sc.setCheckpointDir(graft.sources.TempDirs.create("graft_ck_").toString)
+    try {
+      val before = sc.getPersistentRDDs.keySet
+      val df = q121(spark, sf0001)
+      // Simulates an executor loss without touching other suites' cached
+      // state: drop the blocks of every RDD this build persisted.
+      for ((id, rdd) <- sc.getPersistentRDDs if !before(id)) rdd.unpersist(blocking = true)
+      val got = df.collect().map(_.toString).sorted
+      assert(got.nonEmpty && got.sameElements(expected))
+    } finally sc.setCheckpointDir(null) // back to None: later suites stay local
+  }
+
   test("count_min_sketch aggregate builds the identical sketch to df.stat.countMinSketch") {
     // r19 (guide §4): q83/q148 build their CMS with the codegen
     // count_min_sketch aggregate instead of the RDD-backed stat helper.

@@ -15,6 +15,22 @@ class HarnessSpec extends SparkSpec {
     assert(Bench.spreadOf(Seq(0.0, 2.0)) == 1.0)
   }
 
+  test("Ledger reads a number the same whether written as int, float or big integer") {
+    import graft.tools.Ledger
+    val f = java.nio.file.Files.createTempFile("graft_ledger_", ".json")
+    try {
+      java.nio.file.Files.writeString(f, """{"_meta":{"replicas":64.0},"queries":""" +
+        """{"a":1,"b":2.5,"c":12345678901234567890,"d":"x","e":{"ratio":3}}}""")
+      val doc = Ledger.read(f.toString).get
+      assert(Ledger.num(doc.path("_meta").path("replicas")).contains(64.0))
+      assert(Ledger.nums(doc.path("queries")) ==
+        Map("a" -> 1.0, "b" -> 2.5, "c" -> BigInt("12345678901234567890").toDouble))
+      assert(Ledger.nums(doc.path("queries"), _.path("ratio")) == Map("e" -> 3.0))
+      assert(Ledger.nums(doc.path("absent")).isEmpty)
+      assert(Ledger.read(f.toString + ".absent").isEmpty)
+    } finally java.nio.file.Files.delete(f)
+  }
+
   test("JobStage.named scopes the description: restored after the body, nested stages compose, null restores") {
     val sc = spark.sparkContext
     def current(): String = sc.getLocalProperty("spark.job.description")

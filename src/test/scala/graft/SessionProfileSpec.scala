@@ -61,4 +61,13 @@ class SessionProfileSpec extends SparkSpec {
     assert(bench("spark.sql.autoBroadcastJoinThreshold") == (64L * 1024 * 1024).toString)
     assert(bench("spark.sql.sources.bucketing.autoBucketedScan.enabled") == "false")
   }
+
+  test("the benign-WARN loggers are at ERROR after a build") {
+    assert(spark.sparkContext.isLocal) // forces the profile build
+    for (name <- Seq("org.apache.spark.sql.execution.window",
+        "org.apache.spark.rdd.MapPartitionsRDD",
+        "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream"))
+      assert(org.apache.logging.log4j.LogManager.getLogger(name).getLevel ==
+        org.apache.logging.log4j.Level.ERROR, name)
+  }
 }
