@@ -56,7 +56,8 @@ object GraftSession {
     }
 
   /** JVM-static session defaults every engine entry point wants: the
-    * [[localDir]] (when set) and the codegen cache size.
+    * [[localDir]] (when set), the codegen cache size and the fork-free
+    * local filesystem.
     *
     * `spark.sql.codegen.cache.maxEntries` (STATIC conf — must be set before
     * the first session builds): the 208-query suite generates ~1600 distinct
@@ -66,10 +67,19 @@ object GraftSession {
     * `graft.tools.Profile tasks`). 2048 holds the whole suite; entries are
     * compiled-class references, so the cost is metaspace, not heap. A
     * long-lived production cluster wants the same headroom for the same
-    * reason (one JVM serving many distinct plans). */
+    * reason (one JVM serving many distinct plans).
+    *
+    * `file:` goes through the fork-free local filesystem:
+    * [[graft.sources.ForklessLocalFileSystem]] for the `FileSystem` API and
+    * [[graft.sources.ForklessLocalFs]] for `FileContext`, which the
+    * streaming checkpoint logs use (see there for why). */
   def withStatics(b: SparkSession.Builder): SparkSession.Builder =
     localDir.fold(b)(d => b.config("spark.local.dir", d))
       .config("spark.sql.codegen.cache.maxEntries", "2048")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.ForklessLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.ForklessLocalFs].getName)
 
   /** The one session profile every entry point builds through (Main,
     * Bench, Verify, the tools, the test suites): [[withStatics]], the
@@ -120,11 +130,14 @@ object GraftSession {
     *    AFTER its successor is materialized;
     *  - `ResolveWriteToStream`: "AQE is not supported in streaming" — AQE
     *    is pinned session-wide and Spark turns it off per streaming query,
-    *    once per `UpsertPipeline.runOnce`. */
+    *    once per `UpsertPipeline.runOnce`;
+    *  - `MicroBatchExecution`: "Disabling AQE … stateful workloads" — the
+    *    same session-wide pin, once per stateful streaming start. */
   private val MutedLoggers = Seq(
     "org.apache.spark.sql.execution.window",
     "org.apache.spark.rdd.MapPartitionsRDD",
-    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream")
+    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+    "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution")
 
   private def muteBenignWarns(): Unit =
     try MutedLoggers.foreach(org.apache.logging.log4j.core.config.Configurator

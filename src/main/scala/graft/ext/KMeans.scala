@@ -66,29 +66,31 @@ object KMeans {
     val pts = Tables.embeddings(spark, dir)
       .select($"vec_id", quant($"embedding").as("xfp"))
       .cache()
-    // Deterministic init: the k lowest vec_ids (k rows to the driver).
-    // Precondition: the corpus has at least k vectors — checked on the
-    // already-collected init rows, no extra count job.
-    var cents: Array[Array[Long]] = pts.orderBy($"vec_id").limit(k)
-      .select($"xfp").as[Array[Long]].collect()
-    require(cents.length == k,
-      s"k-means init needs >= $k vectors, corpus has ${cents.length}")
-    for (_ <- 1 to iters) {
-      // One aggregation: per-cluster exact component sums + counts
-      // (k rows × d longs back to the driver — model state, not data).
-      val upd = pts
-        .select(assign($"xfp", cents).getField("cl").as("cl"), $"xfp")
-        .groupBy($"cl")
-        .agg(count(lit(1)).as("n"), vecsum($"xfp").as("s"))
-        .as[(Int, Long, Array[Long])].collect()
-        .map { case (cl, n, s) =>
-          cl -> s.map(v => math.floor(v.toDouble / n).toLong)
-        }.toMap
-      cents = cents.zipWithIndex.map { case (old, cl) =>
-        upd.getOrElse(cl, old) // empty cluster keeps its centroid
+    try {
+      // Deterministic init: the k lowest vec_ids (k rows to the driver).
+      // Precondition: the corpus has at least k vectors — checked on the
+      // already-collected init rows, no extra count job.
+      var cents: Array[Array[Long]] = pts.orderBy($"vec_id").limit(k)
+        .select($"xfp").as[Array[Long]].collect()
+      require(cents.length == k,
+        s"k-means init needs >= $k vectors, corpus has ${cents.length}")
+      for (_ <- 1 to iters) {
+        // One aggregation: per-cluster exact component sums + counts
+        // (k rows × d longs back to the driver — model state, not data).
+        val upd = pts
+          .select(assign($"xfp", cents).getField("cl").as("cl"), $"xfp")
+          .groupBy($"cl")
+          .agg(count(lit(1)).as("n"), vecsum($"xfp").as("s"))
+          .as[(Int, Long, Array[Long])].collect()
+          .map { case (cl, n, s) =>
+            cl -> s.map(v => math.floor(v.toDouble / n).toLong)
+          }.toMap
+        cents = cents.zipWithIndex.map { case (old, cl) =>
+          upd.getOrElse(cl, old) // empty cluster keeps its centroid
+        }
       }
-    }
-    cents
+      cents
+    } finally graft.ops.Materialize.release(pts) // the model is on the driver
   }
 
   /** Per-cluster (n, inertia, checksum) report for literal centroids over

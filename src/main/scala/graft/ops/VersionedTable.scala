@@ -1,7 +1,11 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Versioned parquet table layout: `root/v=N` directories, the highest
@@ -47,13 +51,35 @@ object VersionedTable {
   def latest(spark: SparkSession, root: String): Option[(Int, Path)] =
     committedVersions(spark, root).lastOption
 
-  /** Current table contents; empty with `schema` when nothing is committed. */
+  /** Current table contents; empty with `schema` when nothing is committed.
+    * A committed version reads with its own schema (a column a later
+    * version added surfaces), taken from one part file's footer on the
+    * driver: handing no schema to the reader runs Spark's footer inference,
+    * a one-task job per read. */
   def read(spark: SparkSession, root: String, schema: StructType): DataFrame =
     latest(spark, root) match {
-      case Some((_, path)) => spark.read.parquet(path.toString)
+      case Some((_, path)) =>
+        versionSchema(spark, path).fold(spark.read)(spark.read.schema)
+          .parquet(path.toString)
       case None => spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     }
+
+  /** The schema Spark's parquet inference gives a version directory, read
+    * from the footer of its first data file (one job writes a version, so
+    * its part files share one schema); None when it holds no data file. */
+  private def versionSchema(spark: SparkSession, dir: Path): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    fs(spark, dir).listStatus(dir).find { s =>
+      val name = s.getPath.getName
+      s.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }.map { part =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(part, conf))
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(part.getPath, footer),
+        new ParquetToSparkSchemaConverter(SQLConf.get))
+    }
+  }
 
   /** Time travel: the table's contents at a specific committed version.
     * Old versions stay readable until [[vacuum]] — the audit/reproducibility

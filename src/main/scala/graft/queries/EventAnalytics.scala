@@ -456,8 +456,9 @@ object EventAnalytics {
     val obs = cents.select(digit.cast("int").as("digit"))
       .groupBy($"digit").agg(count(lit(1)).as("observed"))
     val tot = obs.agg(sum($"observed").as("n_values"))
-    broadcast(benford)
-      .join(obs, Seq("digit"), "left")
+    // Every Benford digit survives, so `benford` is the preserved side and
+    // cannot be built; the ≤9-row observed counts are the build side.
+    benford.join(broadcast(obs), Seq("digit"), "left")
       .crossJoin(broadcast(tot))
       .withColumn("observed", coalesce($"observed", lit(0L)))
       .select($"digit", $"observed", $"benford_share",

@@ -371,6 +371,18 @@ class ExtSpec extends SparkSpec {
     } finally sc.setCheckpointDir(null) // back to None: later suites stay local
   }
 
+  test("q166 releases its training cache: no cached frame or persisted RDD outlives the query") {
+    import org.apache.spark.sql.functions.col
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    assert(SparkEntry.queries("q166_kmeans")(spark, sf0001).collect().nonEmpty)
+    // The training loop's cached frame, rebuilt: a cache hit would find it.
+    val pts = graft.sources.Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), graft.ext.KMeans.quant(col("embedding")).as("xfp"))
+    assert(pts.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty)
+  }
+
   test("count_min_sketch aggregate builds the identical sketch to df.stat.countMinSketch") {
     // r19 (guide §4): q83/q148 build their CMS with the codegen
     // count_min_sketch aggregate instead of the RDD-backed stat helper.

@@ -1,15 +1,22 @@
 package graft
 
+import java.net.URI
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+
+import org.apache.hadoop.fs.{ChecksumFs, FileContext, FileSystem, LocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 import graft.functions.GraftFunctions
 import graft.plans.{ApproxDistinctRewrite, AsOfJoinStrategy, MvRewriteRule}
+import graft.sources.{ForklessLocalFileSystem, ForklessLocalFs, ForklessRawLocalFileSystem, ForklessRawLocalFs}
 
 /** The one session profile: [[GraftSession.build]] carries the engine's
   * functions, rules, planner strategy and static pins at build time, so a
   * session derived from it (here `newSession()`, which starts with no temp
   * functions and no experimental rules) has them with no live-session
-  * registration; and the two staged-suite drivers run one SQL conf. */
+  * registration; the two staged-suite drivers run one SQL conf; and
+  * `file:` I/O goes through the fork-free local filesystem. */
 class SessionProfileSpec extends SparkSpec {
 
   private def state(s: SparkSession) =
@@ -66,8 +73,53 @@ class SessionProfileSpec extends SparkSpec {
     assert(spark.sparkContext.isLocal) // forces the profile build
     for (name <- Seq("org.apache.spark.sql.execution.window",
         "org.apache.spark.rdd.MapPartitionsRDD",
-        "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream"))
+        "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+        "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution"))
       assert(org.apache.logging.log4j.LogManager.getLogger(name).getLevel ==
         org.apache.logging.log4j.Level.ERROR, name)
+  }
+
+  test("file: resolves to the fork-free local filesystem for FileSystem and FileContext") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.get(new URI("file:///"), conf)
+    assert(fs.isInstanceOf[ForklessLocalFileSystem], fs.getClass)
+    assert(fs.asInstanceOf[LocalFileSystem].getRaw.isInstanceOf[ForklessRawLocalFileSystem])
+    val afs = FileContext.getFileContext(conf).getDefaultFileSystem
+    assert(afs.getUri.getScheme == "file")
+    assert(afs.isInstanceOf[ForklessLocalFs], afs.getClass)
+    assert(afs.asInstanceOf[ChecksumFs].getRawFs.isInstanceOf[ForklessRawLocalFs])
+  }
+
+  test("a parquet write under the profile leaves the permissions the stock local filesystem leaves") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft_perms_")
+    def write(name: String): Unit =
+      spark.range(100).repartition(2).write.parquet(root.resolve(name).toString)
+    // relative path (part-file UUIDs masked) -> rwx string, dirs included
+    def perms(name: String): Map[String, String] = {
+      val dir = root.resolve(name)
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.map { p =>
+        dir.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "U") ->
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      }.toMap
+      finally walk.close()
+    }
+    write("forkless")
+    // The session's own conf overrides the context's for its writes: an
+    // uncached stock LocalFileSystem (plain RawLocalFileSystem underneath).
+    spark.conf.set("fs.file.impl", classOf[LocalFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      assert(FileSystem.get(new URI("file:///"), state(spark).newHadoopConf())
+        .getClass == classOf[LocalFileSystem])
+      write("stock")
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+    val forkless = perms("forkless")
+    assert(forkless.keys.exists(_.endsWith(".parquet")) && forkless.contains("_SUCCESS"))
+    assert(forkless == perms("stock"))
   }
 }

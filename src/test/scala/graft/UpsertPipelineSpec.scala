@@ -44,6 +44,41 @@ class UpsertPipelineSpec extends SparkSpec {
     assert(after3 == after2)
   }
 
+  test("a symlinked landing dir loads through the fork-free local filesystem") {
+    val target = Files.createTempDirectory("graft_landing_target_")
+    val landing = Files.createTempDirectory("graft_landing_link_").resolve("landing")
+    Files.createSymbolicLink(landing, target)
+    val warehouse = Files.createTempDirectory("graft_warehouse_").toString
+    val checkpoint = Files.createTempDirectory("graft_ckpt_").toString
+    val gas = EmissionsEtl.totalGhgRaw
+    writeCsv(target, "001.csv", Seq(s"""AT,2030,WEM,Energy,"$gas",100.0"""))
+    UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+    writeCsv(target, "002.csv", Seq(s"""DE,2030,WEM,Energy,"$gas",50.0"""))
+    UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+    val got = UpsertPipeline.currentTable(spark, warehouse).collect()
+      .map(r => (r.getString(0), r.getDouble(5))).toMap
+    assert(got == Map("Austria" -> 100.0, "Germany" -> 50.0))
+  }
+
+  test("reading the committed warehouse runs no Spark job (the schema is known)") {
+    val landing = Files.createTempDirectory("graft_landing_")
+    val warehouse = Files.createTempDirectory("graft_warehouse_").toString
+    val checkpoint = Files.createTempDirectory("graft_ckpt_").toString
+    writeCsv(landing, "001.csv",
+      Seq(s"""AT,2030,WEM,Energy,"${EmissionsEtl.totalGhgRaw}",100.0"""))
+    UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+    val listener = new graft.tools.MetricsListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      listener.settled(spark)
+      listener.clear() // events the pipeline posted before the listener joined
+      val current = UpsertPipeline.currentTable(spark, warehouse)
+      listener.settled(spark)
+      assert(listener.jobs.isEmpty, listener.jobs.values.map(_.desc).mkString("; "))
+      assert(current.schema == EmissionsEtl.warehouseSchema)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("CDC landing: I/U/D logs stream into the versioned warehouse, deletes erase, re-run is a no-op") {
     import org.apache.spark.sql.types._
     val landing = Files.createTempDirectory("graft_cdc_landing_")
