@@ -130,10 +130,27 @@ object Bench {
     * and took a worktree A/B to adjudicate). */
   private val SpreadLimit = 3.0
 
-  /** The bench session: the engine profile plus the staged-suite split
-    * sizing — the same conf [[Verify.session]] checks against the oracle. */
+  /** The bench session: the engine profile, the same conf
+    * [[Verify.session]] checks against the oracle. */
   private[graft] def session(cpus: String): org.apache.spark.sql.SparkSession =
-    GraftSession.stagedSuite(GraftSession.build("graft-bench", cpus))
+    GraftSession.build("graft-bench", cpus)
+
+  /** The host a run measured, so an artifact tells a 4-core run from the
+    * 32-core ledgers. Unreadable /proc fields read -1 or "unknown". */
+  private[graft] def host(spark: org.apache.spark.sql.SparkSession): ListMap[String, Any] = {
+    def procField(file: String, key: String): Option[String] =
+      try {
+        val src = scala.io.Source.fromFile(file)
+        try src.getLines().find(_.startsWith(key)).map(_.split(":", 2)(1).trim)
+        finally src.close()
+      } catch { case scala.util.control.NonFatal(_) => None }
+    ListMap("cores" -> spark.sparkContext.defaultParallelism,
+      "nproc" -> Runtime.getRuntime.availableProcessors,
+      "mem_total_mb" -> procField("/proc/meminfo", "MemTotal")
+        .map(_.takeWhile(_.isDigit).toLong / 1024).getOrElse(-1L),
+      "java_version" -> System.getProperty("java.version"),
+      "cpu_model" -> procField("/proc/cpuinfo", "model name").getOrElse("unknown"))
+  }
 
   def main(args: Array[String]): Unit = {
     val tMain = System.nanoTime()
@@ -216,7 +233,7 @@ object Bench {
     }
     locally {
       val t0 = System.nanoTime()
-      val warm = GraftSession.stagedSuite(spark.newSession())
+      val warm = spark.newSession()
       // Pool width swept: 16 threads measured no faster than 8 (67.5 vs
       // 64.2 s — the pass saturates the shared core pool, it is not
       // latency-bound on the streaming queries), so prepare's 8 stands.
@@ -578,14 +595,12 @@ object Bench {
       "speedups_pre_requeue" -> preSpeedups.size,
       "fast_requeue_cleared" -> fastRequeueCleared,
       "median_inflation_vs_recorded" -> sec(medianInflation),
-      "flags_weather_attributed" -> weatherCount)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    println(mapper.writeValueAsString(head ++ ListMap("n_queries" -> results.size,
+      "flags_weather_attributed" -> weatherCount, "host" -> host(spark))
+    println(Ledger.json(head ++ ListMap("n_queries" -> results.size,
       "queries" -> walls(slowest), "queries_omitted" -> (results.size - slowest.size)) ++
       runFields ++ ListMap("worst_regressions" -> flags(regressions.take(8)),
       "octave_ledger" -> octaveNote, "full_map" -> "bench_out.json", "value" -> sec(total))))
-    val full = mapper.writeValueAsString(head ++ ListMap("queries" -> walls(results)) ++
+    val full = Ledger.json(head ++ ListMap("queries" -> walls(results)) ++
       runFields ++ ListMap("regressions" -> flags(regressions),
       "speedups" -> flags(speedups),
       "diag" -> ListMap(results.map { case (k, d) => k -> diagOf(d) }: _*),

@@ -143,16 +143,4 @@ object GraftSession {
     try MutedLoggers.foreach(org.apache.logging.log4j.core.config.Configurator
       .setLevel(_, org.apache.logging.log4j.Level.ERROR))
     catch { case _: Throwable => () } // logging impl absent: keep the noise
-
-  /** Split sizing of the staged-suite drivers (Bench, Verify, Profile), set
-    * at runtime on top of [[build]], so the oracle checks the bench's conf.
-    * The staged tables are ~0.1–0.7 MB/file (Staged.tableDir): the 128 MB
-    * default would pack a table's files into ONE split and re-serialize the
-    * scans this layout exists to parallelize. Kept out of [[build]]: on
-    * small unstaged inputs the extra splits cost more than they win
-    * (olap_sql benchmark at 4 vCPU: cycle 3.4 s → 4.5 s). */
-  def stagedSuite(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
-    spark
-  }
 }

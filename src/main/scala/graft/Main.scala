@@ -11,7 +11,7 @@ import graft.streaming.UpsertPipeline
   * sanity query). One command wires the same stages through this engine:
   *
   *   HTTP fetch → landing dir → streaming upsert (AvailableNow) →
-  *   JDBC warehouse (staged MERGE) → sample SQL readback
+  *   JDBC warehouse (staged upsert) → sample SQL readback
   *
   * Usage (all flags optional):
   * {{{
@@ -26,11 +26,11 @@ import graft.streaming.UpsertPipeline
   * server — the hermetic demo mode (this sandbox has no egress); pass the
   * real endpoint in production. Without `--jdbc` the warehouse is an
   * embedded in-memory Derby — pass a Postgres URL in production (the
-  * MERGE/staging DDL is ANSI, see [[graft.sinks.JdbcWarehouse]]).
+  * upsert/staging SQL is ANSI, see [[graft.sinks.JdbcWarehouse]]).
   *
   * Re-running with the same checkpoint + warehouse is safe by design:
   * files already consumed are skipped by the checkpoint, and re-delivered
-  * batches MERGE to the same state (idempotent upsert — the reference's O3
+  * batches upsert to the same state (idempotent upsert — the reference's O3
   * retry containment).
   */
 object Main {

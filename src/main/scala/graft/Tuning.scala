@@ -26,13 +26,11 @@ import org.apache.spark.sql.SparkSession
   *  - 4 MiB of compressed parquet per shuffle partition ≈ 30–50 MB of
   *    in-flight row data at this fixture's observed ~10× decode expansion —
   *    comfortable task size, and it reproduces the measured-good 256 at the
-  *    sweep's 64× dir (~1.1 GB). Deployments with different compression or
-  *    executor memory tune [[BytesPerPartitionKey]].
+  *    sweep's 64× dir (~1.1 GB).
   *  - The cap bounds scheduler pressure (a 100 TB dir would otherwise
-  *    derive 26M partitions). 4096 is the single-JVM bound; a real cluster
-  *    raises [[MaxPartitionsKey]] toward 2–3× its total cores, and AQE
-  *    (enabled in [[GraftSession]]) coalesces the overshoot at runtime —
-  *    the derived value is the AQE *initial* partitioning in spirit.
+  *    derive 26M partitions). 4096 is the single-JVM bound; AQE (enabled
+  *    in [[GraftSession]]) coalesces the overshoot at runtime — the
+  *    derived value is the AQE *initial* partitioning in spirit.
   *
   * Overshoot is cheap (AQE coalesces empty/small partitions); undershoot is
   * the 64×-measured pathology. Derivation costs one memoized FS
@@ -41,26 +39,24 @@ import org.apache.spark.sql.SparkSession
   * lifetime (fixture dirs are immutable; a live deployment re-tunes per
   * session, not per file arrival).
   *
-  * An explicit `SPARK_GRAFT_SHUFFLE_PARTITIONS` env override wins over the
-  * derivation (the ScaleProbe experiment knob, and the operator's manual
-  * escape hatch).
+  * The same rule sizes the scan side: [[graft.sources.Staged.tableDir]]
+  * re-stages each fixture table into this many files (floored by a minimum
+  * file size), so scans and shuffles share one derivation.
   */
 object Tuning {
 
   /** Master switch: set false to leave `spark.sql.shuffle.partitions`
-    * entirely to the session owner (perf tools sweeping explicit partition
-    * counts — e.g. `tools.Micro`'s SPARK_GRAFT_SHUFFLE knob — must not
-    * have their setting silently re-derived out from under them). */
+    * entirely to the session owner (perf tools setting an explicit
+    * partition count — `tools.Profile`'s `SPARK_GRAFT_XCONF`,
+    * `tools.ScaleProbe`'s `SPARK_GRAFT_SHUFFLE_PARTITIONS` — must not have
+    * their setting silently re-derived out from under them). */
   val EnabledKey = "spark.graft.tuning.enabled"
 
-  /** Compressed input bytes one shuffle partition should carry. */
-  val BytesPerPartitionKey = "spark.graft.tuning.bytesPerShufflePartition"
+  /** Compressed input bytes one partition should carry. */
+  private val BytesPerPartition: Long = 4L << 20
 
-  /** Upper bound on derived shuffle partitions. */
-  val MaxPartitionsKey = "spark.graft.tuning.maxShufflePartitions"
-
-  private val DefaultBytesPerPartition: Long = 4L << 20
-  private val DefaultMaxPartitions = 4096
+  /** Upper bound on derived partitions. */
+  private val MaxPartitions = 4096
 
   private val dirBytesCache = new ConcurrentHashMap[String, java.lang.Long]()
 
@@ -103,19 +99,8 @@ object Tuning {
   }
 
   /** The derivation, pure and spec-testable. */
-  private[graft] def partitionsForBytes(bytes: Long, floor: Int,
-                                        bytesPerPartition: Long = DefaultBytesPerPartition,
-                                        cap: Int = DefaultMaxPartitions): Int =
-    math.max(floor, math.min(cap.toLong, bytes / math.max(1L, bytesPerPartition)).toInt)
-
-  /** Derived shuffle-partition count for queries over `dir`. */
-  def derivedShufflePartitions(spark: SparkSession, dir: String): Int = {
-    val floor = spark.sparkContext.defaultParallelism
-    val bpp = spark.conf.get(BytesPerPartitionKey,
-      DefaultBytesPerPartition.toString).toLong
-    val cap = spark.conf.get(MaxPartitionsKey, DefaultMaxPartitions.toString).toInt
-    partitionsForBytes(dirBytes(spark, dir), floor, bpp, cap)
-  }
+  private[graft] def partitionsForBytes(bytes: Long, floor: Int): Int =
+    math.max(floor, math.min(MaxPartitions.toLong, bytes / BytesPerPartition).toInt)
 
   // Memoized tuned clones, one per (parent session, derived value): the
   // population is bounded by the distinct derivations a JVM actually sees
@@ -168,8 +153,7 @@ object Tuning {
     * never change meaning based on whether its dir floors at the default.
     *
     * Never throws: tuning is an optimization — a failed probe or clone
-    * returns the parent unchanged. Disabled via [[EnabledKey]]=false; the
-    * env override, when present, is applied verbatim, derivation skipped.
+    * returns the parent unchanged. Disabled via [[EnabledKey]]=false.
     *
     * Concurrency contract: the semantics re-sync mutates the SHARED
     * memoized clone's conf on every hit, and SQLConf is read at frame
@@ -183,19 +167,9 @@ object Tuning {
     * (each gets its own clone key via `Tables.sessionKey`), which is the
     * supported isolation boundary. */
   def sessionFor(spark: SparkSession, dir: String): SparkSession =
-    sessionForWith(spark, dir, sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"))
-
-  /** [[sessionFor]] with the env override injectable — the spec seam
-    * (sys.env is immutable in-process, so the override-wins contract is
-    * pinned by calling this directly). */
-  private[graft] def sessionForWith(spark: SparkSession, dir: String,
-                                    envOverride: Option[String]): SparkSession =
     try {
       if (!spark.conf.get(EnabledKey, "true").toBoolean) return spark
-      val target = envOverride match {
-        case Some(n) => n.toInt
-        case None => derivedShufflePartitions(spark, dir)
-      }
+      val target = partitionsForBytes(dirBytes(spark, dir), spark.sparkContext.defaultParallelism)
       if (spark.conf.get("spark.sql.shuffle.partitions").toInt == target) spark
       else {
         val key = (graft.sources.Tables.sessionKey(spark), target)

@@ -1,13 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  /** The bench's session conf ([[Bench.session]]), so the oracle checks the
+  /** The engine profile, as [[Bench.session]], so the oracle checks the
     * configuration the bench measures. */
   private[graft] def session(cpus: String): org.apache.spark.sql.SparkSession =
-    GraftSession.stagedSuite(GraftSession.build("graft-verify", cpus))
+    GraftSession.build("graft-verify", cpus)
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -30,8 +29,7 @@ object Verify {
     // Jackson escapes quotes, backslashes and every control character, so
     // SQL with a tab or CR still loads as JSON in the oracle compare.
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      new com.fasterxml.jackson.databind.ObjectMapper()
-        .writeValueAsString(SparkEntry.oracleSql.asJava))
+      graft.tools.Ledger.json(SparkEntry.oracleSql))
     spark.stop()
   }
 }

@@ -347,7 +347,7 @@ object Similarity {
       // Deterministic content-keyed draw, NOT sample(): per-partition RNG
       // seeding makes sample() depend on scan partitioning, so for corpora
       // large enough that fraction < 1 the trained centroids would vary
-      // with session conf (maxPartitionBytes, file layout) — breaking the
+      // with session conf (split size, file layout) — breaking the
       // "trained model is a pure value of the corpus" contract behind
       // Staged.ivfModel. A hash filter on the key admits exactly the same
       // rows under ANY partitioning (pinned by AnnStagedModelSpec's
@@ -368,7 +368,7 @@ object Similarity {
       // depends on scan partitioning — i.e. on session conf — so the
       // "trained model is a pure value of the corpus" contract behind
       // Staged.ivfModel would silently break across sessions with
-      // different maxPartitionBytes. Sorted limit plans as
+      // different split sizes. Sorted limit plans as
       // TakeOrderedAndProject (per-partition top-k, never a global sort);
       // repartition restores trainer parallelism (≤ maxTrainRows rows —
       // a trivial shuffle).

@@ -84,42 +84,45 @@ object Staged {
     * a little extra storage in exchange for a race that can't happen. */
   private def catalogId(spark: SparkSession): String = Tables.sessionKey(spark)
 
-  /** Scan-parallelism re-staging: file count per table for
-    * [[tableDir]]. The driver fixture is ONE parquet file with ONE row
-    * group per table, a layout where every Spark scan stage — and the
-    * filters, projections and partial aggregates fused into it — plans as
-    * a SINGLE task no matter how many cores the cluster has (row groups
-    * are the unit of parallel parquet reads; `maxPartitionBytes` cannot
-    * split below one). Production corpora are thousands of files; the
-    * engine's ingest boundary therefore re-lays-out single-file drops into
-    * a multi-file layout ONCE per corpus (the reference's own bulk-load
-    * staging concept, SURVEY §2a K3) and every query scans that. Tiny dims
-    * (region, nation, supplier) stay raw — a second file would cost more
-    * scheduling than it buys. CPU-heavy per-row tables (documents: shingle
-    * and scoring kernels) get the most files. */
-  private val parallelFiles: Map[String, Int] = Map(
-    "lineitem" -> 32, "orders" -> 16, "events" -> 16, "documents" -> 32,
-    "embeddings" -> 8, "customer" -> 8, "part" -> 8)
+  /** Smallest staged file: a table whose bytes would give fewer than two
+    * files this size reads its raw fixture. Every staged file costs a
+    * scheduled task per scan and a write at staging, and below this size
+    * that fixed cost outweighs the split: staging all ten tables with no
+    * floor (the three tiny dims included) cost the `olap_sql` benchmark
+    * setup time on a 4-vCPU host (4.08 → 4.38 s), while the floor kept
+    * the gain (4.09 → 3.09 s). */
+  private[graft] val MinFileBytes: Long = 16L << 10
 
-  /** The scan path for `dir/name`: the memoized multi-file re-staging for
-    * tables in [[parallelFiles]], the raw fixture file otherwise. */
-  def tableDir(spark: SparkSession, dir: String, name: String): String =
-    parallelFiles.get(name) match {
-      case None => s"$dir/$name.parquet"
-      case Some(n) =>
-        getOrStage(s"ptable:$dir:$name") {
-          val out = TempDirs.create(s"graft_tbl_${name}_").toString + s"/$name"
-          // events fixtures have shipped ns-TIMESTAMP and µs-NTZ `ts`
-          // across generations; the staged copy always holds plain INT64
-          // epoch-nanos, so every later read is format-independent.
-          val raw =
-            if (name == "events") Tables.readEventsRaw(spark, s"$dir/$name.parquet")
-            else spark.read.parquet(s"$dir/$name.parquet")
-          raw.repartition(n)
-            .write.mode("overwrite").parquet(out)
-          out
-        }
+  /** The scan path for `dir/name`. The driver fixture is ONE parquet file
+    * with ONE row group per table, a layout where every Spark scan stage —
+    * and the filters, projections and partial aggregates fused into it —
+    * plans as a SINGLE task no matter how many cores the cluster has (row
+    * groups are the unit of parallel parquet reads). The engine's ingest
+    * boundary therefore re-lays-out each single-file drop ONCE per corpus
+    * (the reference's own bulk-load staging concept, SURVEY §2a K3) into
+    * the shuffle rule's count ([[graft.Tuning.partitionsForBytes]]),
+    * capped so no file holds less than [[MinFileBytes]], and every query
+    * scans that; a table that would get one file reads its raw fixture.
+    * With at most `defaultParallelism` files per table, Spark's default
+    * split packing plans one task per file. */
+  def tableDir(spark: SparkSession, dir: String, name: String): String = {
+    val raw = s"$dir/$name.parquet"
+    val bytes = graft.Tuning.probeDirBytes(spark, raw, "graft-staged")
+    val n = math.min(graft.Tuning.partitionsForBytes(bytes,
+      spark.sparkContext.defaultParallelism).toLong, bytes / MinFileBytes).toInt
+    if (n <= 1) raw
+    else getOrStage(s"ptable:$dir:$name") {
+      val out = TempDirs.create(s"graft_tbl_${name}_").toString + s"/$name"
+      // events fixtures have shipped ns-TIMESTAMP and µs-NTZ `ts`
+      // across generations; the staged copy always holds plain INT64
+      // epoch-nanos, so every later read is format-independent.
+      val df =
+        if (name == "events") Tables.readEventsRaw(spark, raw)
+        else spark.read.parquet(raw)
+      df.repartition(n).write.mode("overwrite").parquet(out)
+      out
     }
+  }
 
   /** q107's layout: lineitem projection z-order-clustered on
     * (l_orderkey, l_partkey) across 16 files. Returns the parquet dir. */
@@ -560,7 +563,7 @@ object Staged {
       p.future
     }
     try {
-      Await.result(Future.sequence(parallelFiles.keys.toSeq.map(t =>
+      Await.result(Future.sequence(Tables.all.map(t =>
         timed(s"table:$t")(tableDir(spark, dir, t)))), Duration.Inf)
       Await.result(Future.sequence(Seq(
         timed("zorderLineitem")(zorderLineitem(spark, dir)),

@@ -18,7 +18,7 @@ object EventsStream {
   /** Upper bound on input-derived streaming state partitions
     * ([[pinnedPartitionsFor]]). Default 32 = the single-JVM run-once
     * bound; a continuous cluster deployment raises it toward 2-3× its
-    * core count, same posture as [[graft.Tuning.MaxPartitionsKey]]. */
+    * core count. */
   val MaxStatePartitionsKey = "spark.graft.streaming.maxStatePartitions"
 
   /** Raw parquet schema of events (ns timestamps read as long). */

@@ -5,11 +5,17 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 /** The one reader of the committed JSON ledgers (`BENCH_BASELINE_PERQ.json`,
-  * `OCTAVE_BASELINE.json`) that Bench and ScaleProbe compare against. A
-  * number reads the same whether its writer serialized it as an integer,
-  * a float or a big decimal. */
+  * `OCTAVE_BASELINE.json`) that Bench and ScaleProbe compare against, and
+  * the one writer of the reports they and Verify emit. A number reads the
+  * same whether its writer serialized it as an integer, a float or a big
+  * decimal. */
 object Ledger {
   private val mapper = new ObjectMapper()
+    .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+
+  /** `doc` (insertion-ordered Scala maps, sequences, numbers, strings) as
+    * one JSON line; Jackson escapes every string. */
+  def json(doc: Any): String = mapper.writeValueAsString(doc)
 
   /** The ledger at `path` as a tree; None when the file does not exist.
     * An unreadable file throws. */

@@ -10,7 +10,6 @@ object PrepareProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = graft.GraftSession.build("prepare-probe",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
     val t0 = System.nanoTime()
     graft.sources.Staged.prepare(spark, sfDir)
     println(f"prepare(cold): ${(System.nanoTime() - t0) / 1e9}%.1f s")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.{GraftSession, JobStage, SparkEntry}
 
-/** Local perf profiler for named SparkEntry queries on the staged-suite
-  * session (the conf Bench and Verify run). Each query runs once cold, then
+/** Local perf profiler for named SparkEntry queries on the engine profile
+  * (the conf Bench and Verify run). Each query runs once cold, then
   * 3 timed reps (wall/tasks) or 1 (jobs/stages), all on one
   * [[MetricsListener]]. Modes:
   *
@@ -37,7 +37,7 @@ object Profile {
     val reps = if (mode == "wall" || mode == "tasks") 3 else 1
     val xconf = sys.env.getOrElse("SPARK_GRAFT_XCONF", "").split(';').filter(_.contains("="))
       .map { kv => val Array(k, v) = kv.split("=", 2); k.trim -> v.trim }.toMap
-    val spark = GraftSession.stagedSuite(GraftSession.build("graft-profile"))
+    val spark = GraftSession.build("graft-profile")
     (xconf.get("spark.sql.shuffle.partitions").map(_ => graft.Tuning.EnabledKey -> "false") ++
       xconf).foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sparkContext.setLogLevel("ERROR")

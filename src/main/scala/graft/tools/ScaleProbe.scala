@@ -12,19 +12,13 @@ import graft.sources.Tables
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.build("scale-probe", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    // Optional override for the partition-scaling experiment: the session
-    // default pins shuffle partitions to the core count, which is the
-    // right LOCAL setting but understates a cluster, where partitions
-    // scale with data volume (design rule #6). SPARK_GRAFT_SHUFFLE_PARTITIONS
-    // lets a probe measure that rule instead of asserting it.
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-    // Same split sizing as Bench: the staged bench-scale files are ~0.1-3 MB
-    // each, and the 128 MB default (with its 4 MB open-cost floor) packs a
-    // whole table into 1-2 splits — the probe would then measure split
-    // packing, not operator scaling (q10's 8x ratio read 12x from a
-    // 1-task scan of the replicated lineitem; 7x with honest splits).
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
+    // SPARK_GRAFT_SHUFFLE_PARTITIONS pins one shuffle partitioning on both
+    // dirs, with the per-query derivation ([[graft.Tuning]]) off so the
+    // probe measures the value it set.
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").foreach { n =>
+      spark.conf.set("spark.sql.shuffle.partitions", n)
+      spark.conf.set(graft.Tuning.EnabledKey, "false")
+    }
     import spark.implicits._
     val base = "/root/testdata/sf0.1"
     // ≥2 octaves of evidence: default 8×; SPARK_GRAFT_REPLICAS=32 (or any
@@ -398,7 +392,6 @@ object ScaleProbe {
     if (sweep.nonEmpty) {
       val OctaveFactor = 1.5
       val OctaveMinDeltaSec = 1.0
-      def j(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
       val recPath = sys.env.getOrElse("SPARK_GRAFT_OCTAVE_BASELINE", "OCTAVE_BASELINE.json")
       // A missing replica count reads as 0: no comparable ledger.
       val recorded: (Int, Map[String, Double]) = try {
@@ -425,20 +418,8 @@ object ScaleProbe {
         s"(factor $OctaveFactor, floor ${OctaveMinDeltaSec}s, ${sweep.size} queries)")
       else println(s"[octave] no comparable ledger at $recPath for replicas=$replicas " +
         s"(recorded replicas=${recorded._1}) — ledger compare skipped")
-      // JSON-escape every interpolated string: base_dir is operator-chosen
-      // and query keys reach here from args — a quote or backslash in
-      // either would emit a document the ledger tooling can't parse.
-      def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-      val rows = sweep.map { case (q, (t1, t8)) =>
-        s""""${esc(q)}":{"base":${j(t1)},"big":${j(t8)},"ratio":${j(t8 / math.max(t1, 0.05))}}"""
-      }.mkString(",")
-      val flagRows = flags.map { case (q, r1, r0) =>
-        s""""${esc(q)}":{"ratio":${j(r1)},"recorded_ratio":${j(r0)}}""" }.mkString(",")
       val outPath = sys.env.getOrElse("SPARK_GRAFT_OCTAVE_OUT", "octave_out.json")
-      val doc = s"""{"_meta":{"replicas":$replicas,"reps":$probeReps,""" +
-        s""""base_dir":"${esc(base)}","n_queries":${sweep.size},""" +
-        s""""octave_regressions":${flags.size}},""" +
-        s""""flags":{$flagRows},"queries":{$rows}}"""
+      val doc = octaveReport(replicas, probeReps, base, sweep.toSeq, flags)
       try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (doc + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case e: Throwable => System.err.println(s"[octave] write $outPath: ${e.getMessage}") }
@@ -536,5 +517,23 @@ object ScaleProbe {
       println(f"${s"q164 fixed-vocab ${replicas}x rel-support"}%-38s $t1%8.2f $tRel%8.2f  ${tRel / t1}%.1fx")
     }
     spark.stop()
+  }
+
+  /** The octave ledger document (`octave_out.json`): per-query base/big
+    * walls and ratio, and the flagged regressions beside their recorded
+    * ratios. Values round half-up to 3 places. */
+  private[graft] def octaveReport(replicas: Int, reps: Int, baseDir: String,
+                                  sweep: Seq[(String, (Double, Double))],
+                                  flags: Seq[(String, Double, Double)]): String = {
+    import scala.collection.immutable.ListMap
+    def j(d: Double) = java.math.BigDecimal.valueOf(d).setScale(3, java.math.RoundingMode.HALF_UP)
+    Ledger.json(ListMap(
+      "_meta" -> ListMap("replicas" -> replicas, "reps" -> reps, "base_dir" -> baseDir,
+        "n_queries" -> sweep.size, "octave_regressions" -> flags.size),
+      "flags" -> ListMap(flags.map { case (q, r1, r0) =>
+        q -> ListMap("ratio" -> j(r1), "recorded_ratio" -> j(r0)) }: _*),
+      "queries" -> ListMap(sweep.map { case (q, (t1, t8)) =>
+        q -> ListMap("base" -> j(t1), "big" -> j(t8), "ratio" -> j(t8 / math.max(t1, 0.05)))
+      }: _*)))
   }
 }

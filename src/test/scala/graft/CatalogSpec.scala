@@ -112,11 +112,11 @@ class CatalogSpec extends SparkSpec {
     // session reachable)
     val dir = java.nio.file.Files.createTempDirectory("graft_drop_clone_")
     java.nio.file.Files.write(dir.resolve("blob.bin"), new Array[Byte](48 << 20))
-    val cloneA = Tuning.sessionForWith(s2, dir.toString, Some("9"))
+    val cloneA = Tuning.sessionFor(s2, dir.toString)
     assert(cloneA ne s2)
-    assert(Tuning.sessionForWith(s2, dir.toString, Some("9")) eq cloneA)
+    assert(Tuning.sessionFor(s2, dir.toString) eq cloneA)
     Tables.dropSession(s2)
-    assert(Tuning.sessionForWith(s2, dir.toString, Some("9")) ne cloneA,
+    assert(Tuning.sessionFor(s2, dir.toString) ne cloneA,
       "dropSession must evict the session's tuned clones")
   }
 }

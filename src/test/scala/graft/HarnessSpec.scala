@@ -49,4 +49,27 @@ class HarnessSpec extends SparkSpec {
     }
     assert(current() == null, "a throwing body must still restore")
   }
+
+  test("the octave report parses back equal when base_dir holds a tab, a newline and a quote") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val base = "/data/a\tb\nc\"d\\e"
+    val doc = new ObjectMapper().readTree(graft.tools.ScaleProbe.octaveReport(64, 3, base,
+      Seq("q\"1" -> (1.0, 8.25), "q2" -> (0.01, 0.5)), Seq(("q\"1", 8.25, 5.0))))
+    val meta = doc.path("_meta")
+    assert(meta.path("base_dir").asText == base)
+    assert(meta.path("replicas").asInt == 64 && meta.path("reps").asInt == 3)
+    assert(meta.path("n_queries").asInt == 2 && meta.path("octave_regressions").asInt == 1)
+    assert(doc.path("queries").path("q\"1").path("ratio").doubleValue == 8.25)
+    // the ratio's denominator is floored at 0.05 s
+    assert(doc.path("queries").path("q2").path("ratio").doubleValue == 10.0)
+    assert(doc.path("flags").path("q\"1").path("recorded_ratio").doubleValue == 5.0)
+  }
+
+  test("Bench's host record carries cores, nproc, memory, Java version and CPU model") {
+    val host = Bench.host(spark)
+    assert(host.keySet == Set("cores", "nproc", "mem_total_mb", "java_version", "cpu_model"))
+    assert(host("cores") == spark.sparkContext.defaultParallelism)
+    assert(host("nproc").asInstanceOf[Int] >= 1)
+    assert(host("java_version") == System.getProperty("java.version"))
+  }
 }

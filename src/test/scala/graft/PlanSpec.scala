@@ -34,6 +34,29 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("SortMergeJoin"))
   }
 
+  test("q10 at sf0.001 on the bench session runs no stage with more tasks than cores") {
+    // Staged file counts come from bytes and cores (Staged.tableDir), so
+    // a 6,000-row lineitem is not split into a 32-task scan.
+    val fresh = spark.newSession()
+    org.apache.spark.sql.SparkSession.setActiveSession(fresh)
+    val bench = try Bench.session("4") finally
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    assert(bench eq fresh)
+    val listener = new graft.tools.MetricsListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      listener.settled(spark)
+      listener.clear()
+      SparkEntry.queries("q10_revenue_by_nation")(bench, sf0001)
+        .write.mode("overwrite").format("noop").save()
+      listener.settled(spark)
+      val tasks = listener.stages.values.map(_.tasks)
+      assert(tasks.nonEmpty)
+      assert(tasks.max <= spark.sparkContext.defaultParallelism,
+        s"stage task counts: ${tasks.toSeq.sorted.mkString(", ")}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("with broadcast disabled the big join falls back to sort-merge (both strategies live)") {
     withoutBroadcast {
       val li = graft.sources.Tables.lineitem(spark, sf0001)

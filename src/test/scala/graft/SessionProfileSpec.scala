@@ -15,7 +15,7 @@ import graft.sources.{ForklessLocalFileSystem, ForklessLocalFs, ForklessRawLocal
   * functions, rules, planner strategy and static pins at build time, so a
   * session derived from it (here `newSession()`, which starts with no temp
   * functions and no experimental rules) has them with no live-session
-  * registration; the two staged-suite drivers run one SQL conf; and
+  * registration; every entry point runs one SQL conf; and
   * `file:` I/O goes through the fork-free local filesystem. */
 class SessionProfileSpec extends SparkSpec {
 
@@ -63,8 +63,11 @@ class SessionProfileSpec extends SparkSpec {
   test("Bench and Verify sessions have equal SQL conf except core count") {
     val bench = sqlConfOf(Bench.session("8"))
     val verify = sqlConfOf(Verify.session("3"))
+    val plain = sqlConfOf(GraftSession.build("graft-plain", "2"))
     assert(bench == verify)
-    assert(bench("spark.sql.files.maxPartitionBytes") == (4L * 1024 * 1024).toString)
+    assert(bench == plain)
+    assert(!bench.contains("spark.sql.files.maxPartitionBytes"),
+      "split size is Spark's default on every entry point")
     assert(bench("spark.sql.autoBroadcastJoinThreshold") == (64L * 1024 * 1024).toString)
     assert(bench("spark.sql.sources.bucketing.autoBucketedScan.enabled") == "false")
   }

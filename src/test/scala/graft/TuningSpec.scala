@@ -38,7 +38,6 @@ class TuningSpec extends SparkSpec {
   test("derivation is capped") {
     // a 100 TB dir must not demand 26M partitions from the scheduler
     assert(Tuning.partitionsForBytes(100L << 40, floor = 32) == 4096)
-    assert(Tuning.partitionsForBytes(100L << 40, floor = 32, cap = 512) == 512)
   }
 
   test("sessionFor returns the parent untouched when the derivation equals its setting") {
@@ -123,8 +122,7 @@ class TuningSpec extends SparkSpec {
     // planner strategies (q19's NativeAsOfJoin) or optimizer rules (q21's
     // ApproxDistinctRewrite) at BUILD time must register on the CLONE's
     // experimental methods and produce parent-identical results.
-    val clone = Tuning.sessionForWith(spark, bigDir("graft_tune_ext_"),
-      envOverride = Some("7"))
+    val clone = Tuning.sessionFor(spark, bigDir("graft_tune_ext_"))
     assert(clone ne spark)
     val asof = RelationalRegistry.queries("q19_asof_join")(clone, sf0001)
     assert(asof.sparkSession eq clone)
@@ -135,14 +133,6 @@ class TuningSpec extends SparkSpec {
       "clone execution must match parent execution")
     assert(RelationalRegistry.queries("q21_approx_distinct")(clone, sf0001)
       .count() > 0)
-  }
-
-  test("explicit env override wins over the derivation") {
-    val dir = bigDir("graft_tune_env_")
-    val tuned = Tuning.sessionForWith(spark, dir, envOverride = Some("77"))
-    assert(shufflePartitionsOf(tuned) == 77,
-      "SPARK_GRAFT_SHUFFLE_PARTITIONS must be applied verbatim, derivation skipped")
-    assert(shufflePartitionsOf(spark) != 77, "parent must stay untouched")
   }
 
   test("semantics confs re-sync from parent to a memoized clone on every hit") {
@@ -191,5 +181,21 @@ class TuningSpec extends SparkSpec {
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "999",
         "the caller's session conf must not be mutated")
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("staged tables: the raw fixture exactly when the rule gives one file, else that many part files") {
+    import graft.sources.{Staged, Tables}
+    val cores = spark.sparkContext.defaultParallelism
+    for (t <- Tables.all) {
+      val raw = s"$sf0001/$t.parquet"
+      val bytes = Tuning.probeDirBytes(spark, raw, "tuning-spec")
+      val n = math.min(Tuning.partitionsForBytes(bytes, cores).toLong, bytes / (16L << 10)).toInt
+      val path = Staged.tableDir(spark, sf0001, t)
+      if (n <= 1) assert(path == raw, s"$t: $n file(s) must read the raw fixture")
+      else {
+        val parts = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
+        assert(parts == n, s"$t: staged $parts part files, the rule gives $n")
+      }
+    }
   }
 }
