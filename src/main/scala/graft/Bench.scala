@@ -152,6 +152,23 @@ object Bench {
       "cpu_model" -> procField("/proc/cpuinfo", "model name").getOrElse("unknown"))
   }
 
+  /** The driver keeps a ~2,000-character stdout TAIL: a longer line loses
+    * its head and does not parse. The margin leaves room for a log prefix. */
+  val CompactLineMaxChars = 1900
+
+  /** The compact stdout line: as many of `slowest` (slowest first), then of
+    * the `worst` regressions, as fit in [[CompactLineMaxChars]]; the rest is in
+    * bench_out.json. */
+  private[graft] def compactLine(head: ListMap[String, Any], slowest: Seq[(String, Any)],
+                                 runFields: ListMap[String, Any], worst: Seq[(String, Any)],
+                                 tail: ListMap[String, Any]): String = {
+    def line(nq: Int, nw: Int) = Ledger.json(head ++ ListMap("n_queries" -> slowest.size,
+      "queries" -> ListMap(slowest.take(nq): _*), "queries_omitted" -> (slowest.size - nq)) ++
+      runFields ++ ListMap("worst_regressions" -> ListMap(worst.take(nw): _*)) ++ tail)
+    (for (nw <- (worst.size to 0 by -1).iterator; nq <- (slowest.size to 0 by -1).iterator)
+      yield line(nq, nw)).find(_.length <= CompactLineMaxChars).getOrElse(line(0, 0))
+  }
+
   def main(args: Array[String]): Unit = {
     val tMain = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -540,16 +557,8 @@ object Bench {
           s"${num("n_queries")} queries recorded"
       }
     } catch { case scala.util.control.NonFatal(_) => "unreadable" }
-    // The driver captures only a ~2000-char TAIL of stdout, so a single line
-    // carrying all ~141 per-query timings (~4.5 KB) arrives with its head cut
-    // off and never parses (BENCH_r04/r05 both show `parsed: null`). Split the
-    // artifact: stdout gets ONE compact, fully-parseable JSON line — totals
-    // plus the 30 slowest queries (the ones any perf question is about) —
-    // and the complete per-query map + diagnostics go to bench_out.json.
-    val slowest = results.sortBy(-_._2.wall).take(30)
-    // Compact line carries the regression COUNT plus the 8 worst offenders
-    // (bounded: the stdout tail is ~2000 chars); the full list with both
-    // sides of every compare goes to bench_out.json.
+    // The compact line carries the regression COUNT plus up to the 8 worst
+    // offenders; bench_out.json has every compare, both sides.
     // Each surviving flag carries its own weather evidence: external cores
     // observed alongside the query's reps and its task/CPU ratio — the
     // self-adjudication VERDICT r17 #2 asked for.
@@ -596,10 +605,9 @@ object Bench {
       "fast_requeue_cleared" -> fastRequeueCleared,
       "median_inflation_vs_recorded" -> sec(medianInflation),
       "flags_weather_attributed" -> weatherCount, "host" -> host(spark))
-    println(Ledger.json(head ++ ListMap("n_queries" -> results.size,
-      "queries" -> walls(slowest), "queries_omitted" -> (results.size - slowest.size)) ++
-      runFields ++ ListMap("worst_regressions" -> flags(regressions.take(8)),
-      "octave_ledger" -> octaveNote, "full_map" -> "bench_out.json", "value" -> sec(total))))
+    println(compactLine(head, walls(results.sortBy(-_._2.wall)).toSeq, runFields,
+      flags(regressions.take(8)).toSeq, ListMap("octave_ledger" -> octaveNote,
+        "full_map" -> "bench_out.json", "value" -> sec(total))))
     val full = Ledger.json(head ++ ListMap("queries" -> walls(results)) ++
       runFields ++ ListMap("regressions" -> flags(regressions),
       "speedups" -> flags(speedups),

@@ -20,9 +20,9 @@ object EmissionsEtl {
   val totalGhgClean = "Total GHG emissions"
   val unitLabel = "kt CO2 equivalent"
 
-  /** 30-entry country dimension (`scripts/etl_process.py:33-64`). Kept as
-    * data, joined broadcast — the reference's own TODO (`:32`) suggests a
-    * dim table; a literal map does not scale past trivial cardinality. */
+  /** 30-entry country dimension (`scripts/etl_process.py:33-64`), decoded
+    * by literal map as the reference does (P7); past trivial cardinality it
+    * would be a broadcast-joined dim table (the reference's TODO, `:32`). */
   val countryCodeMap: Map[String, String] = Map(
     "AT" -> "Austria", "BE" -> "Belgium", "BG" -> "Bulgaria",
     "CH" -> "Switzerland", "CY" -> "Cyprus", "CZ" -> "Czech Republic",
@@ -85,16 +85,8 @@ object EmissionsEtl {
   def renameReportedValue(df: DataFrame): DataFrame =
     df.withColumnRenamed("Reported Value", "ReportedValue")
 
-  /** P7: country decode. Idiomatic form: broadcast join against the dim
-    * (scales to any dimension size); `decodeCountryLiteralMap` keeps the
-    * reference's literal-map shape for parity tests. */
-  def decodeCountry(df: DataFrame)(implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import spark.implicits._
-    val dim = countryCodeMap.toSeq.toDF("CountryCode", "Country")
-    df.join(broadcast(dim), Seq("CountryCode"), "left")
-  }
-
-  /** P7 (literal-map variant, `scripts/etl_process.py:67,92`): map miss → null. */
+  /** P7: country decode by the reference's literal map (`:67,92`), a
+    * per-row lookup with no join; a map miss decodes to null. */
   def decodeCountryLiteralMap(df: DataFrame): DataFrame = {
     val mapExpr = typedLit(countryCodeMap)
     df.withColumn("Country", mapExpr(col("CountryCode")))
@@ -112,18 +104,8 @@ object EmissionsEtl {
 
   /** Full P1→P8 chain — the reference's `transform_data`
     * (`scripts/etl_process.py:78-95`). Narrow throughout: scan → project →
-    * filter → case-when → broadcast-join; zero shuffles. */
-  def transform(raw: DataFrame, carryCols: Seq[String] = Nil)
-               (implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val chained =
-      ((df: DataFrame) => project(df, carryCols))
-        .andThen(dropNullKeys)
-        .andThen(filterGasAndCountries)
-        .andThen(deriveUnit)
-        .andThen(normalizeGas)
-        .andThen(renameReportedValue)
-        .andThen(df => decodeCountry(df))
-        .apply(raw)
-    finalShape(chained, carryCols)
-  }
+    * filter → case-when → map lookup; one stage, no join, no shuffle. */
+  def transform(raw: DataFrame, carryCols: Seq[String] = Nil): DataFrame =
+    finalShape(decodeCountryLiteralMap(renameReportedValue(normalizeGas(deriveUnit(
+      filterGasAndCountries(dropNullKeys(project(raw, carryCols))))))), carryCols)
 }

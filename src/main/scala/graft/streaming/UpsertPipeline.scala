@@ -14,13 +14,30 @@ import graft.ops.{EmissionsEtl, Merge}
   *  - at-least-once delivery + idempotent merge ⇒ effectively-once results
   *    (`scripts/lambda_handler_warehouse.py:95-101`);
   *  - later-arriving files win on key conflict (the sequential per-file loop
-  *    at `:79`) — within a micro-batch, ARRIVAL order is imposed explicitly
-  *    via `_metadata.file_modification_time` (path as tiebreak);
+  *    at `:79`) — ARRIVAL order is imposed explicitly via
+  *    `_metadata.file_modification_time` (path as tiebreak); stored rows
+  *    arrive before every file, and ONE window resolves them with the batch
+  *    (one shuffle, one write per micro-batch, as in [[runOnceCdc]]);
   *  - the warehouse table is readable at every point (versioned directories,
   *    latest-complete wins; a real deployment swaps in a table format's
   *    atomic commit, but the merge operator is identical).
   */
 object UpsertPipeline {
+
+  /** Arrival order of a batch row: its landing file's modification time,
+    * then its path. Stored rows carry nulls, which sort last on `desc`. */
+  private val Arrival = Seq("__file_ts", "__file")
+
+  /** Latest row per merge key by arrival, arrival columns dropped. */
+  private def latestByArrival(df: DataFrame): DataFrame =
+    Merge.latestPerKey(df, EmissionsEtl.mergeKeys, Arrival).drop(Arrival: _*)
+
+  /** Next version: stored rows (null arrival) and `batch` in one window. */
+  private def commitArrivals(spark: SparkSession, warehouseDir: String, batch: DataFrame): Unit =
+    latestByArrival(currentTable(spark, warehouseDir)
+        .unionByName(batch, allowMissingColumns = true))
+      .write.mode(SaveMode.Overwrite)
+      .parquet(graft.ops.VersionedTable.nextVersionPath(spark, warehouseDir))
 
   /** Latest committed warehouse state (empty with the warehouse schema if
     * nothing has been committed yet). Resolution and the `_SUCCESS`-gated
@@ -28,13 +45,14 @@ object UpsertPipeline {
   def currentTable(spark: SparkSession, warehouseDir: String): DataFrame =
     graft.ops.VersionedTable.read(spark, warehouseDir, EmissionsEtl.warehouseSchema)
 
-  /** Merge one transformed batch into the warehouse (new version dir). */
-  def commitBatch(spark: SparkSession, warehouseDir: String, transformed: DataFrame): Unit = {
-    val merged = Merge.upsert(currentTable(spark, warehouseDir), transformed,
-      EmissionsEtl.mergeKeys)
-    merged.write.mode(SaveMode.Overwrite)
-      .parquet(graft.ops.VersionedTable.nextVersionPath(spark, warehouseDir))
-  }
+  /** Merge one key-unique batch into the warehouse (new version dir) by
+    * [[runOnce]]'s one window: `updates` get a constant non-null arrival, so
+    * each beats its key's stored row (null arrival, which sorts last).
+    * Keys are non-null after P2/P3; the window would resolve null-key rows
+    * as one key, where `Merge.upsert` keeps them side by side. */
+  def commitBatch(spark: SparkSession, warehouseDir: String, updates: DataFrame): Unit =
+    commitArrivals(spark, warehouseDir,
+      updates.select(col("*"), current_timestamp().as("__file_ts"), lit("").as("__file")))
 
   /** Merge one transformed batch into a HASH-BUCKET-PARTITIONED warehouse
     * ([[graft.ops.PartitionedTable]]): first batch creates the layout,
@@ -57,33 +75,32 @@ object UpsertPipeline {
   def runOncePartitioned(spark: SparkSession, landingDir: String,
                          warehouseRoot: String, checkpointDir: String,
                          nBuckets: Int = 16): Unit =
-    runEtlPipeline(spark, landingDir, checkpointDir) { unique =>
-      commitBatchPartitioned(spark, warehouseRoot, unique, nBuckets)
+    runEtlPipeline(spark, landingDir, checkpointDir) { batch =>
+      commitBatchPartitioned(spark, warehouseRoot, latestByArrival(batch), nBuckets)
     }
 
   /** Same event-driven pipeline, but the sink is the JDBC warehouse — the
     * reference's actual target (Postgres RDS; embedded Derby in tests).
-    * `foreachBatch` + the staged-MERGE upsert give the same
+    * `foreachBatch` + the transactional staged upsert give the same
     * at-least-once + idempotent ⇒ effectively-once contract as the parquet
     * path: a re-delivered batch MERGEs to the same state. */
   def runOnceJdbc(spark: SparkSession, landingDir: String, jdbcUrl: String,
                   checkpointDir: String): Unit =
-    runEtlPipeline(spark, landingDir, checkpointDir) { unique =>
-      graft.sinks.JdbcWarehouse.upsertBatch(unique, jdbcUrl)
+    runEtlPipeline(spark, landingDir, checkpointDir) { batch =>
+      graft.sinks.JdbcWarehouse.upsertBatch(latestByArrival(batch), jdbcUrl)
     }
 
-  /** The shared CSV-landing → P1-P8 transform → key-unique batch core of
-    * the upsert pipelines ([[runOnce]] and [[runOnceJdbc]] differ only in
-    * the sink — one body so the ordering/carry logic cannot diverge).
+  /** The shared CSV-landing → P1-P8 transform core of the upsert
+    * pipelines, which differ only in the sink. The sink gets the batch with
+    * its [[Arrival]] columns and resolves it by [[latestByArrival]].
     *
-    * "Later file wins" means ARRIVAL order, so the within-batch conflict
-    * rule orders by the file's modification time with the path as a pure
-    * tiebreak — ordering by path alone made "file_9.csv" beat a
-    * later-landed "file_10.csv" lexicographically. */
+    * "Later file wins" means ARRIVAL order, so the conflict rule orders by
+    * the file's modification time with the path as a pure tiebreak —
+    * ordering by path alone made "file_9.csv" beat a later-landed
+    * "file_10.csv" lexicographically. */
   private def runEtlPipeline(spark: SparkSession, landingDir: String,
                              checkpointDir: String)
                             (sink: DataFrame => Unit): Unit = {
-    implicit val s: SparkSession = spark
     val raw = spark.readStream
       .schema(EmissionsEtl.rawSchema)
       .option("header", "true")
@@ -95,13 +112,8 @@ object UpsertPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val transformed =
-          EmissionsEtl.transform(batch, carryCols = Seq("__file_ts", "__file"))
-        val unique = Merge.latestPerKey(transformed, EmissionsEtl.mergeKeys,
-            Seq("__file_ts", "__file"))
-          .drop("__file_ts", "__file")
         graft.JobStage.named(spark, s"upsert-pipeline: transform+merge commit (batch $batchId)") {
-          sink(unique)
+          sink(EmissionsEtl.transform(batch, carryCols = Arrival))
         }
         ()
       }
@@ -133,7 +145,6 @@ object UpsertPipeline {
                  checkpointDir: String,
                  logSchema: org.apache.spark.sql.types.StructType,
                  keys: Seq[String], seqCol: String, opCol: String): Unit = {
-    implicit val s: SparkSession = spark
     val raw = spark.readStream
       .schema(logSchema)
       .option("header", "true")
@@ -187,7 +198,6 @@ object UpsertPipeline {
     * next batch's sweep. */
   def runOnceRollup(spark: SparkSession, landingDir: String, warehouseDir: String,
                     checkpointDir: String): Unit = {
-    implicit val s: SparkSession = spark
     import org.apache.spark.sql.types._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rollupSchema = StructType(Seq(
@@ -250,7 +260,7 @@ object UpsertPipeline {
     * trigger for a continuous schedule; checkpointing makes either safe. */
   def runOnce(spark: SparkSession, landingDir: String, warehouseDir: String,
               checkpointDir: String): Unit =
-    runEtlPipeline(spark, landingDir, checkpointDir) { unique =>
-      commitBatch(spark, warehouseDir, unique)
+    runEtlPipeline(spark, landingDir, checkpointDir) { batch =>
+      commitArrivals(spark, warehouseDir, batch)
     }
 }

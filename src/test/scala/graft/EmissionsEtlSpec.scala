@@ -23,7 +23,6 @@ class EmissionsEtlSpec extends SparkSpec {
   }
 
   test("transform keeps only valid rows, decodes country, types columns") {
-    implicit val s = spark
     val out = transform(fixture).orderBy("Country").collect()
     assert(out.toSeq == Seq(
       Row("Austria", 2030, "WEM", "Energy", totalGhgClean, 123.5, unitLabel),
@@ -31,18 +30,20 @@ class EmissionsEtlSpec extends SparkSpec {
   }
 
   test("output schema matches the warehouse DDL") {
-    implicit val s = spark
     assert(transform(fixture).schema.map(f => (f.name, f.dataType)) ==
       warehouseSchema.map(f => (f.name, f.dataType)))
   }
 
-  test("literal-map decode equals broadcast-dim decode") {
-    implicit val s = spark
+  test("literal-map decode equals a join against `countryCodeMap`") {
+    import spark.implicits._
     val pre = renameReportedValue(normalizeGas(deriveUnit(
       filterGasAndCountries(dropNullKeys(project(fixture))))))
+    val dim = countryCodeMap.toSeq.toDF("CountryCode", "Country")
     val viaMap = finalShape(decodeCountryLiteralMap(pre)).orderBy("Country").collect()
-    val viaDim = finalShape(decodeCountry(pre)).orderBy("Country").collect()
-    assert(viaMap.toSeq == viaDim.toSeq)
+    val viaJoin = finalShape(pre.join(dim, Seq("CountryCode"), "left"))
+      .orderBy("Country").collect()
+    assert(viaMap.toSeq == viaJoin.toSeq)
+    assert(viaMap.map(_.getString(0)).toSeq == Seq("Austria", "Germany"))
   }
 
   test("unknown code under literal map decodes to null (reference map-miss semantics)") {

@@ -72,4 +72,47 @@ class HarnessSpec extends SparkSpec {
     assert(host("nproc").asInstanceOf[Int] >= 1)
     assert(host("java_version") == System.getProperty("java.version"))
   }
+
+  test("Bench's compact line fits the stdout tail with 208 queries and 8 regressions, and parses") {
+    import scala.collection.immutable.ListMap
+    def sec(v: Double) = java.math.BigDecimal.valueOf(v).setScale(3, java.math.RoundingMode.HALF_UP)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    assert(names.size == 208)
+    val slowest = names.zipWithIndex.map { case (k, i) => k -> sec(100.0 - i * 0.37) }
+    val flag = ListMap("sec" -> sec(12.345), "baseline_sec" -> sec(1.234),
+      "steal_cores" -> sec(0.123), "ext_cores" -> sec(1.234),
+      "task_cpu_ratio" -> sec(2.345), "reps_measured" -> 5, "weather_suspect" -> false)
+    val worst = names.sortBy(-_.length).take(8).map(_ -> flag)
+    val runFields = ListMap("prepare_sec" -> sec(12.5), "prepare_failed" -> false,
+      "reps" -> 3, "reps_target" -> 3, "respread_reruns" -> 12,
+      "task_cpu_ratio" -> sec(1.9), "steal_cores" -> sec(0.01),
+      "regressions_vs_recorded" -> 8, "regressions_pre_requeue" -> 20,
+      "requeue_cleared" -> 12, "speedups_vs_recorded" -> 70,
+      "speedups_pre_requeue" -> 75, "fast_requeue_cleared" -> 5,
+      "median_inflation_vs_recorded" -> sec(1.123), "flags_weather_attributed" -> 3,
+      "host" -> Bench.host(spark))
+    val tail = ListMap("octave_ledger" -> "OCTAVE_BASELINE.json: 64x replicas, 208 queries recorded",
+      "full_map" -> "bench_out.json", "value" -> sec(12345.678))
+    val line = Bench.compactLine(ListMap("metric" -> "total", "unit" -> "sec",
+      "sf" -> "/data/testdata/sf0.1"), slowest, runFields, worst, tail)
+    assert(line.length <= 2000, s"${line.length} chars")
+    val doc = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    val queries = doc.path("queries")
+    assert(queries.size + doc.path("queries_omitted").asInt == 208)
+    assert(doc.path("n_queries").asInt == 208)
+    // the slowest ones, in order
+    assert(scala.jdk.CollectionConverters.IteratorHasAsScala(queries.fieldNames).asScala.toSeq ==
+      slowest.take(queries.size).map(_._1))
+    assert(doc.path("value").doubleValue == 12345.678)
+    assert(doc.path("host").path("cores").asInt == spark.sparkContext.defaultParallelism)
+    // a run with no regressions carries at least the 30 slowest queries
+    val quiet = Bench.compactLine(ListMap.empty, slowest, runFields, Nil, tail)
+    assert(quiet.length <= 2000 &&
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(quiet).path("queries").size >= 30)
+    // nothing is dropped when everything fits
+    val small = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      Bench.compactLine(ListMap.empty, slowest.take(3), runFields, worst.take(1), tail))
+    assert(small.path("queries").size == 3 && small.path("queries_omitted").asInt == 0 &&
+      small.path("worst_regressions").size == 1)
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import graft.streaming.UpsertPipeline
 import graft.ops.EmissionsEtl
+import org.apache.spark.sql.functions.lit
 
 /** End-to-end reference lifecycle: files land → streaming pickup → transform
   * → keyed merge into the versioned warehouse; re-delivery is idempotent. */
@@ -77,6 +78,106 @@ class UpsertPipelineSpec extends SparkSpec {
       assert(listener.jobs.isEmpty, listener.jobs.values.map(_.desc).mkString("; "))
       assert(current.schema == EmissionsEtl.warehouseSchema)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def dirs() = (Files.createTempDirectory("graft_landing_"),
+    Files.createTempDirectory("graft_warehouse_").toString,
+    Files.createTempDirectory("graft_ckpt_").toString)
+
+  /** Ten distinct-key rows: one per country code from `from`. */
+  private def tenRows(from: Int, value: Double): Seq[String] =
+    EmissionsEtl.countryCodeMap.keys.toSeq.sorted.slice(from, from + 10).map(c =>
+      s"""$c,2030,WEM,Energy,"${EmissionsEtl.totalGhgRaw}",$value""")
+
+  test("a micro-batch is evaluated once: a 10-row delta file reads 10 input rows") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val (landing, warehouse, checkpoint) = dirs()
+    writeCsv(landing, "001.csv", tenRows(0, 1.0))
+    UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+    val inputRows = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        inputRows.addAndGet(e.progress.numInputRows)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    org.apache.spark.sql.graftshim.drainListenerBus(spark)
+    spark.streams.addListener(listener)
+    try {
+      writeCsv(landing, "002.csv", tenRows(5, 2.0)) // 5 updates, 5 new keys
+      UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+      org.apache.spark.sql.graftshim.drainListenerBus(spark)
+      assert(inputRows.get == 10)
+    } finally spark.streams.removeListener(listener)
+    assert(UpsertPipeline.currentTable(spark, warehouse).count() == 15)
+  }
+
+  test("a delta commit runs at most two Spark jobs and writes one part file") {
+    val (landing, warehouse, checkpoint) = dirs()
+    writeCsv(landing, "001.csv", tenRows(0, 1.0))
+    UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+    val listener = new graft.tools.MetricsListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      listener.settled(spark)
+      listener.clear()
+      writeCsv(landing, "002.csv", tenRows(5, 2.0))
+      UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+      listener.settled(spark)
+      val commitJobs = listener.jobs.values.map(_.desc)
+        .filter(_.startsWith("upsert-pipeline: transform+merge commit"))
+      assert(commitJobs.nonEmpty && commitJobs.size <= 2, commitJobs.mkString("; "))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, version) = graft.ops.VersionedTable.latest(spark, warehouse).get
+    val parts = new java.io.File(version.toUri.getPath).listFiles()
+      .map(_.getName).filter(_.startsWith("part-"))
+    assert(parts.length == 1, parts.mkString(", "))
+  }
+
+  test("re-landing a file's rows verbatim under a new name leaves the warehouse unchanged") {
+    val (landing, warehouse, checkpoint) = dirs()
+    val gas = EmissionsEtl.totalGhgRaw
+    val first = Seq(s"""AT,2030,WEM,Energy,"$gas",100.0""",
+      s"""DE,2030,WEM,Energy,"$gas",50.0""")
+    writeCsv(landing, "001.csv", first)
+    UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+    writeCsv(landing, "002.csv", Seq(s"""FR,2030,WEM,Energy,"$gas",75.0"""))
+    UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+    def rows() = UpsertPipeline.currentTable(spark, warehouse).collect().map(_.toSeq).toSet
+    val before = rows()
+    writeCsv(landing, "003.csv", first)
+    UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+    assert(rows() == before)
+    assert(before.size == 3)
+  }
+
+  test("a stored key loses to the batch row when only ReportedValue differs, smaller or larger") {
+    val (landing, warehouse, checkpoint) = dirs()
+    val gas = EmissionsEtl.totalGhgRaw
+    writeCsv(landing, "001.csv", Seq(s"""AT,2030,WEM,Energy,"$gas",100.0""",
+      s"""DE,2030,WEM,Energy,"$gas",50.0"""))
+    UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+    writeCsv(landing, "002.csv", Seq(s"""AT,2030,WEM,Energy,"$gas",5.0""",
+      s"""DE,2030,WEM,Energy,"$gas",500.0"""))
+    UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+    val got = UpsertPipeline.currentTable(spark, warehouse).collect()
+      .map(r => (r.getString(0), r.getDouble(5))).toMap
+    assert(got == Map("Austria" -> 5.0, "Germany" -> 500.0))
+  }
+
+  test("commitBatch: key-unique updates win over stored rows, new keys insert") {
+    import spark.implicits._
+    val warehouse = Files.createTempDirectory("graft_warehouse_").toString
+    def batch(rows: (String, Double)*) = rows.toDF("Country", "ReportedValue")
+      .select($"Country", lit(2030).as("Year"), lit("WEM").as("Scenario"),
+        lit("Energy").as("Category"), lit(EmissionsEtl.totalGhgClean).as("Gas"),
+        $"ReportedValue", lit(EmissionsEtl.unitLabel).as("Unit"))
+    UpsertPipeline.commitBatch(spark, warehouse, batch("Austria" -> 100.0, "Germany" -> 50.0))
+    UpsertPipeline.commitBatch(spark, warehouse, batch("Austria" -> 1.0, "France" -> 75.0))
+    val got = UpsertPipeline.currentTable(spark, warehouse).collect()
+      .map(r => (r.getString(0), r.getDouble(5))).toMap
+    assert(got == Map("Austria" -> 1.0, "Germany" -> 50.0, "France" -> 75.0))
   }
 
   test("CDC landing: I/U/D logs stream into the versioned warehouse, deletes erase, re-run is a no-op") {
