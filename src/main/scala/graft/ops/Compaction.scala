@@ -93,10 +93,8 @@ object Compaction {
     VersionedTable.latest(spark, root).foreach { case (_, latestPath) =>
       val bytes = math.max(dataBytes(spark, latestPath.toString), 1L)
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      spark.read.parquet(latestPath.toString)
-        .coalesce(nFiles)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(VersionedTable.nextVersionPath(spark, root))
+      VersionedTable.commit(spark, root,
+        spark.read.parquet(latestPath.toString).coalesce(nFiles))
       if (!keepOld) VersionedTable.vacuum(spark, root)
     }
   }

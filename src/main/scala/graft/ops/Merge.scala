@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -13,10 +14,15 @@ import org.apache.spark.sql.expressions.Window
   *  - [[upsert]]: anti-join + union. When `updates` is small (the common
   *    incremental-load case) the anti-join broadcasts the update keys, so the
   *    100 TB target side is never shuffled — this is the scale path.
-  *  - [[upsertVersioned]]: window dedup over a union, for merging many
-  *    batches in one pass with an explicit priority (file ordinal in the
-  *    reference's sequential loop, `scripts/lambda_handler_warehouse.py:79`).
-  *    One shuffle on the merge keys.
+  *  - [[latestPerKey]]: one window over a union, for merging many batches
+  *    in one pass with an explicit priority (file ordinal in the reference's
+  *    sequential loop, `scripts/lambda_handler_warehouse.py:79`). One
+  *    shuffle on the merge keys. [[upsertVersioned]] and [[applyCdc]] are
+  *    this window with a version or sequence column as the priority.
+  *
+  * Ties on the priority go to the larger value of the remaining columns
+  * (see [[latestPerKey]]), so a batch that repeats a key resolves the same
+  * way whatever its row order, for every sink, the JDBC one included.
   */
 object Merge {
 
@@ -50,27 +56,10 @@ object Merge {
       .unionByName(updates)
   }
 
-  /** Merge a union of versioned rows: highest `versionCol` wins per key.
-    * A (key, version) tie — a contract violation, each version's batch must
-    * be key-unique — is broken by the remaining ORDERABLE data columns
-    * descending, so even violated inputs resolve DETERMINISTICALLY
-    * (re-running the merge returns the same winner; a version-only ordering
-    * picked whichever row the shuffle delivered first). Unorderable columns
-    * (maps, arrays of maps) are skipped from the tiebreak rather than
-    * failing analysis — a frame that carries one still merges; only a
-    * violated input whose duplicates differ SOLELY in an unorderable column
-    * resolves shuffle-order-arbitrarily, which no ordering could fix. */
-  def upsertVersioned(all: DataFrame, keys: Seq[String], versionCol: String): DataFrame = {
-    val tiebreak = all.columns.toIndexedSeq
-      .filterNot(c => keys.contains(c) || c == versionCol)
-      .filter(c => org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .isOrderable(all.schema(c).dataType))
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy((col(versionCol).desc +: tiebreak.map(col(_).desc)): _*)
-    all.withColumn("__graft_rn", row_number().over(w))
-      .filter(col("__graft_rn") === 1)
-      .drop("__graft_rn", versionCol)
-  }
+  /** Merge a union of versioned rows: highest `versionCol` wins per key,
+    * ties resolved as in [[latestPerKey]]; the version column is dropped. */
+  def upsertVersioned(all: DataFrame, keys: Seq[String], versionCol: String): DataFrame =
+    latestPerKey(all, keys, Seq(versionCol)).drop(versionCol)
 
   /** Apply a CDC operation log to a table — the merge-with-deletes the plain
     * upsert cannot express (Debezium/DMS-style change streams: each log row
@@ -78,9 +67,10 @@ object Merge {
     * highest-sequence operation wins; if it is a delete the key vanishes,
     * otherwise the row carries the operation's values. Existing target rows
     * participate as inserts from before every log entry (`Long.MinValue`
-    * sequence), so one window pass resolves target-vs-log and log-vs-log
-    * conflicts together: exactly one shuffle on the key, state per key is
-    * one row. Idempotent — re-applying any suffix of the log is a no-op.
+    * sequence), so one [[latestPerKey]] pass resolves target-vs-log and
+    * log-vs-log conflicts together: exactly one shuffle on the key, state
+    * per key is one row. Idempotent — re-applying any suffix of the log is
+    * a no-op.
     *
     * `log` must carry the target's columns plus `seqCol` (numeric, monotone
     * per key) and `opCol` ('I' | 'U' | 'D'; D rows only need the keys). */
@@ -91,17 +81,27 @@ object Merge {
       .withColumn(seqCol, lit(Long.MinValue))
       .withColumn(opCol, lit("I"))
     val all = asLog.unionByName(log.select((dataCols ++ Seq(seqCol, opCol)).map(col): _*))
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(seqCol).desc)
-    all.withColumn("__graft_rn", row_number().over(w))
-      .filter(col("__graft_rn") === 1 && col(opCol) =!= "D")
+    latestPerKey(all, keys, Seq(seqCol))
+      .filter(col(opCol) =!= "D")
       .select(dataCols.map(col): _*)
   }
 
-  /** Keep the winning row per key ordered by `orderCols` descending —
-    * building block for making update batches key-unique. */
+  /** Keep the winning row per key: the highest `orderCols`, descending in
+    * turn. A tie on every order column is broken by the remaining ORDERABLE
+    * columns descending, so the larger value wins and the result never
+    * depends on row order or on which row the shuffle delivered first.
+    * Unorderable columns (maps, arrays of maps) are skipped from the
+    * tiebreak rather than failing analysis; only rows that differ SOLELY in
+    * one resolve arbitrarily, which no ordering could fix. The one
+    * last-write-wins window of the engine: [[upsertVersioned]],
+    * [[applyCdc]] and every [[graft.streaming.UpsertPipeline]] sink resolve
+    * through it. */
   def latestPerKey(df: DataFrame, keys: Seq[String], orderCols: Seq[String]): DataFrame = {
+    val tiebreak = df.columns.toIndexedSeq
+      .filterNot(c => keys.contains(c) || orderCols.contains(c))
+      .filter(c => RowOrdering.isOrderable(df.schema(c).dataType))
     val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(orderCols.map(col(_).desc): _*)
+      .orderBy((orderCols ++ tiebreak).map(col(_).desc): _*)
     df.withColumn("__graft_rn", row_number().over(w))
       .filter(col("__graft_rn") === 1)
       .drop("__graft_rn")

@@ -94,7 +94,7 @@ object PartitionedTable {
     * crashed half-created table has NO marker, reads as absent, and the
     * retrying creator's static overwrite wipes it. A PRESENT marker counts
     * as existing even if unreadable: treating corruption as absence would
-    * let the pipeline's exists→create branch silently wipe an ESTABLISHED
+    * let a writer's exists→create branch silently wipe an ESTABLISHED
     * table whose marker was damaged externally — corruption must fail the
     * loud way, in [[meta]]. */
   def exists(spark: SparkSession, root: String): Boolean = {
@@ -161,7 +161,7 @@ object PartitionedTable {
     val (keys, nBuckets) = meta(spark, root)
     // Materialize the update batch ONCE: it feeds the touched-bucket
     // collect, the upsert's anti-join probe, and the upsert's union — an
-    // uncached lazy frame (e.g. the pipeline's transform + window dedup)
+    // uncached lazy frame (e.g. a transform + window dedup)
     // would re-run its whole upstream chain three times per commit.
     // Batch-sized by contract, so the checkpoint is the cheap side.
     val up = graft.JobStage.named(spark, "partitioned-table: update batch checkpoint") {

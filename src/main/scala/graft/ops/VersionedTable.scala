@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -16,11 +16,11 @@ import org.apache.spark.sql.types.StructType
   * same swap discipline a table format's commit log provides, reduced to
   * what a plain object store offers: one atomic marker-file creation.
   *
-  * Writers: write to [[nextVersionPath]] with SaveMode.Overwrite (a crashed
-  * earlier attempt without `_SUCCESS` is invisible to readers and gets
-  * overwritten by the retry), then the table is live. No rename window.
+  * Writers: [[commit]] writes the next version with SaveMode.Overwrite (a
+  * crashed earlier attempt without `_SUCCESS` is invisible to readers and
+  * gets overwritten by the retry), then the table is live. No rename window.
   *
-  * ONE writer at a time per table: [[nextVersionPath]] resolves from a
+  * ONE writer at a time per table: the next version resolves from a
   * directory listing, so concurrent writers can claim the same version and
   * interleave their part files. Readers are unrestricted; writer/maintenance
   * serialization is the caller's job (see
@@ -95,9 +95,17 @@ object VersionedTable {
 
   /** Directory for the next version (latest committed + 1 — an uncommitted
     * leftover at that number is a crashed attempt; overwrite it). */
-  def nextVersionPath(spark: SparkSession, root: String): String = {
+  private def nextVersionPath(spark: SparkSession, root: String): String = {
     val next = latest(spark, root).map(_._1 + 1).getOrElse(0)
     s"${root.stripSuffix("/")}/v=$next"
+  }
+
+  /** Write `data` as the table's next version and return that version's
+    * directory; the version is live once the write's `_SUCCESS` lands. */
+  def commit(spark: SparkSession, root: String, data: DataFrame): String = {
+    val path = nextVersionPath(spark, root)
+    data.write.mode(SaveMode.Overwrite).parquet(path)
+    path
   }
 
   /** Drop all committed versions below the latest plus any uncommitted

@@ -144,8 +144,7 @@ object MvRewrite {
     // committedVersions() is a full LIST plus per-version _SUCCESS probes,
     // and this refresh already pays one for next-version and one for
     // retention below.
-    val versionPath = graft.ops.VersionedTable.nextVersionPath(spark, d.mvRoot)
-    data.write.mode("overwrite").parquet(versionPath)
+    val versionPath = graft.ops.VersionedTable.commit(spark, d.mvRoot, data)
     val mvRel = spark.read.parquet(versionPath)
       .queryExecution.analyzed
       .collectFirst { case lr: LogicalRelation => lr }.get
@@ -159,7 +158,7 @@ object MvRewrite {
     // deployment whose scans can outlive two refresh cycles raises it.
     // Only COMMITTED (`_SUCCESS`-marked) versions are candidates: an
     // uncommitted dir is a concurrent writer's in-flight attempt (or a
-    // crashed one that nextVersionPath will overwrite), never ours to
+    // crashed one that the next commit will overwrite), never ours to
     // delete. VersionedTable.vacuum is too aggressive here (keeps only
     // the latest).
     locally {

@@ -391,9 +391,9 @@ object EventsStream {
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           val cur = graft.ops.VersionedTable.read(spark, mvDir, mvSchema)
-          graft.ops.Merge.upsert(cur, b, Seq("event_type", "day"))
-            .write.mode("overwrite")
-            .parquet(graft.ops.VersionedTable.nextVersionPath(spark, mvDir))
+          graft.ops.VersionedTable.commit(spark, mvDir,
+            graft.ops.Merge.upsert(cur, b, Seq("event_type", "day")))
+          ()
         }
         .start()
     }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.ops.{EmissionsEtl, Merge}
+import graft.ops.{EmissionsEtl, Merge, VersionedTable}
 
 /** The reference's complete event-driven pipeline (SURVEY.md §3.1+§3.2) as
   * one Structured Streaming job: file lands in a watched directory → P1-P8
@@ -18,9 +18,15 @@ import graft.ops.{EmissionsEtl, Merge}
   *    `_metadata.file_modification_time` (path as tiebreak); stored rows
   *    arrive before every file, and ONE window resolves them with the batch
   *    (one shuffle, one write per micro-batch, as in [[runOnceCdc]]);
+  *  - one file that repeats a key keeps the row with the larger value
+  *    ([[graft.ops.Merge.latestPerKey]]'s tiebreak), whatever the rows'
+  *    order in the file, in every sink including [[runOnceJdbc]]. The
+  *    reference's Postgres `ON CONFLICT` rejects such a file outright; here
+  *    it loads, order-free;
   *  - the warehouse table is readable at every point (versioned directories,
   *    latest-complete wins; a real deployment swaps in a table format's
-  *    atomic commit, but the merge operator is identical).
+  *    atomic commit behind [[graft.ops.VersionedTable.commit]], but the
+  *    merge operator is identical).
   */
 object UpsertPipeline {
 
@@ -34,16 +40,14 @@ object UpsertPipeline {
 
   /** Next version: stored rows (null arrival) and `batch` in one window. */
   private def commitArrivals(spark: SparkSession, warehouseDir: String, batch: DataFrame): Unit =
-    latestByArrival(currentTable(spark, warehouseDir)
-        .unionByName(batch, allowMissingColumns = true))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(graft.ops.VersionedTable.nextVersionPath(spark, warehouseDir))
+    VersionedTable.commit(spark, warehouseDir, latestByArrival(
+      currentTable(spark, warehouseDir).unionByName(batch, allowMissingColumns = true)))
 
   /** Latest committed warehouse state (empty with the warehouse schema if
     * nothing has been committed yet). Resolution and the `_SUCCESS`-gated
     * commit discipline live in [[graft.ops.VersionedTable]]. */
   def currentTable(spark: SparkSession, warehouseDir: String): DataFrame =
-    graft.ops.VersionedTable.read(spark, warehouseDir, EmissionsEtl.warehouseSchema)
+    VersionedTable.read(spark, warehouseDir, EmissionsEtl.warehouseSchema)
 
   /** Merge one key-unique batch into the warehouse (new version dir) by
     * [[runOnce]]'s one window: `updates` get a constant non-null arrival, so
@@ -53,31 +57,6 @@ object UpsertPipeline {
   def commitBatch(spark: SparkSession, warehouseDir: String, updates: DataFrame): Unit =
     commitArrivals(spark, warehouseDir,
       updates.select(col("*"), current_timestamp().as("__file_ts"), lit("").as("__file")))
-
-  /** Merge one transformed batch into a HASH-BUCKET-PARTITIONED warehouse
-    * ([[graft.ops.PartitionedTable]]): first batch creates the layout,
-    * every later batch reads and rewrites ONLY the partitions its keys
-    * hash into — per-batch write cost is O(touched buckets), not O(table).
-    * This is the 100 TB form of [[commitBatch]], whose versioned commit
-    * rewrites the full target per merge; the reference's Postgres
-    * `ON CONFLICT` had the touched-pages-only property natively
-    * (`scripts/lambda_handler_warehouse.py:95-101`). */
-  def commitBatchPartitioned(spark: SparkSession, warehouseRoot: String,
-                             transformed: DataFrame, nBuckets: Int = 16): Unit =
-    if (!graft.ops.PartitionedTable.exists(spark, warehouseRoot))
-      graft.ops.PartitionedTable.create(spark, warehouseRoot, transformed,
-        EmissionsEtl.mergeKeys, nBuckets)
-    else graft.ops.PartitionedTable.merge(spark, warehouseRoot, transformed)
-
-  /** [[runOnce]] with the partitioned warehouse sink: identical pipeline
-    * semantics (at-least-once delivery + idempotent LWW merge ⇒
-    * effectively-once), touched-partition-only write amplification. */
-  def runOncePartitioned(spark: SparkSession, landingDir: String,
-                         warehouseRoot: String, checkpointDir: String,
-                         nBuckets: Int = 16): Unit =
-    runEtlPipeline(spark, landingDir, checkpointDir) { batch =>
-      commitBatchPartitioned(spark, warehouseRoot, latestByArrival(batch), nBuckets)
-    }
 
   /** Same event-driven pipeline, but the sink is the JDBC warehouse — the
     * reference's actual target (Postgres RDS; embedded Derby in tests).
@@ -108,18 +87,24 @@ object UpsertPipeline {
       .csv(landingDir)
       .withColumn("__file_ts", col("_metadata.file_modification_time"))
       .withColumn("__file", col("_metadata.file_path"))
-    val q = raw.writeStream
+    drain(spark, raw, checkpointDir, "upsert-pipeline: transform+merge commit") { batch =>
+      sink(EmissionsEtl.transform(batch, carryCols = Arrival))
+    }
+  }
+
+  /** Hand every micro-batch of `raw` to `sink` until the landing dir is
+    * drained (Trigger.AvailableNow), each batch's jobs described as
+    * `stage (batch N)`. */
+  private def drain(spark: SparkSession, raw: DataFrame, checkpointDir: String,
+                    stage: String)(sink: DataFrame => Unit): Unit =
+    raw.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.JobStage.named(spark, s"upsert-pipeline: transform+merge commit (batch $batchId)") {
-          sink(EmissionsEtl.transform(batch, carryCols = Arrival))
-        }
-        ()
+        graft.JobStage.named(spark, s"$stage (batch $batchId)")(sink(batch))
       }
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
 
   /** CDC variant of the pipeline: the landing directory receives operation
     * logs (data columns + a monotone sequence + an I/U/D op), and each
@@ -149,20 +134,11 @@ object UpsertPipeline {
       .schema(logSchema)
       .option("header", "true")
       .csv(landingDir)
-    val q = raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val state = graft.ops.VersionedTable.read(spark, warehouseDir, logSchema)
-        graft.JobStage.named(spark, s"cdc-pipeline: resolve+commit (batch $batchId)") {
-          Merge.latestPerKey(state.unionByName(batch), keys, Seq(seqCol))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(graft.ops.VersionedTable.nextVersionPath(spark, warehouseDir))
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(spark, raw, checkpointDir, "cdc-pipeline: resolve+commit") { batch =>
+      val state = VersionedTable.read(spark, warehouseDir, logSchema)
+      VersionedTable.commit(spark, warehouseDir,
+        Merge.latestPerKey(state.unionByName(batch), keys, Seq(seqCol)))
+    }
   }
 
   /** Consumer view of a [[runOnceCdc]] warehouse: live rows only (delete
@@ -170,90 +146,9 @@ object UpsertPipeline {
   def currentCdcTable(spark: SparkSession, warehouseDir: String,
                       logSchema: org.apache.spark.sql.types.StructType,
                       seqCol: String, opCol: String): DataFrame =
-    graft.ops.VersionedTable.read(spark, warehouseDir, logSchema)
+    VersionedTable.read(spark, warehouseDir, logSchema)
       .filter(col(opCol) =!= "D")
       .drop(seqCol, opCol)
-
-  /** Incremental-view maintenance over the event stream (the streaming form
-    * of q92's refresh algebra): each micro-batch folds its PARTIAL
-    * aggregate state (count, raw sum) per (day, event_type) into a
-    * CUMULATIVE partial, and the maintained rollup is that cumulative
-    * state finalized — the event history is never rescanned (partials are
-    * rollup-sized: bounded by days × types, not by events).
-    *
-    * Cumulative dirs are batchId-KEYED (micro_batch=N, overwritten on
-    * replay) — the KmeansMonitor device — because foreachBatch is
-    * at-least-once: folding a replayed batch's partial into state that
-    * already contains it would double-count (an earlier form did exactly
-    * that on crash-resume: additive folds are NOT replay-idempotent).
-    * Batch N reads ONLY the newest dir strictly below N (so a replayed
-    * attempt's own half-written dir is never its input) and writes dir N
-    * = that state + its own partial; per-batch cost is therefore O(rollup
-    * size), not O(#batches) — the pre-round-13 form re-read EVERY
-    * micro_batch=* dir per batch and never pruned, so a long-running
-    * deployment accrued one dir per batch forever. Dirs strictly below
-    * the fold source are garbage: every future read (including a replay
-    * of N) needs at most the newest-below-N dir, so they are deleted
-    * after the fold — a crash mid-delete just leaves stragglers for the
-    * next batch's sweep. */
-  def runOnceRollup(spark: SparkSession, landingDir: String, warehouseDir: String,
-                    checkpointDir: String): Unit = {
-    import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rollupSchema = StructType(Seq(
-      StructField("day", TimestampType), StructField("event_type", StringType),
-      StructField("n_events", LongType), StructField("sum_value", DoubleType)))
-    val raw = spark.readStream
-      .schema(EventsStream.rawSchema)
-      .parquet(landingDir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val partialsDir = s"$warehouseDir/_partials"
-    val q = raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = new org.apache.hadoop.fs.Path(partialsDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // Cumulative dirs strictly below this batch (a half-written dir
-        // from a crashed attempt of THIS batch id must not feed itself).
-        val existing: Seq[Long] =
-          if (!fs.exists(root)) Seq.empty
-          else fs.listStatus(root).toSeq.map(_.getPath.getName)
-            .collect { case s if s.startsWith("micro_batch=") =>
-              s.stripPrefix("micro_batch=").toLong }
-            .filter(_ < batchId)
-        val batchPartial = batch
-          .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-        val foldFrom = existing.maxOption
-        val cumulative = foldFrom match {
-          case None => batchPartial
-          case Some(m) =>
-            spark.read.schema(rollupSchema)
-              .parquet(s"$partialsDir/micro_batch=$m")
-              .unionByName(batchPartial)
-              .groupBy(col("day"), col("event_type"))
-              .agg(sum(col("n_events")).as("n_events"),
-                sum(col("sum_value")).as("sum_value"))
-        }
-        cumulative.write.mode(SaveMode.Overwrite)
-          .parquet(s"$partialsDir/micro_batch=$batchId")
-        spark.read.schema(rollupSchema)
-          .parquet(s"$partialsDir/micro_batch=$batchId")
-          .write.mode(SaveMode.Overwrite)
-          .parquet(graft.ops.VersionedTable.nextVersionPath(spark, warehouseDir))
-        // GC below the fold source; the source itself must survive until
-        // this batch's checkpoint commit (a replay of batchId reads it).
-        foldFrom.foreach { m =>
-          existing.filter(_ < m).foreach { k =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$partialsDir/micro_batch=$k"), true)
-          }
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
 
   /** Run the pipeline over everything currently in `landingDir`, then stop
     * (Trigger.AvailableNow). Call repeatedly as new files land — or swap the

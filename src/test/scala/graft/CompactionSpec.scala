@@ -24,10 +24,8 @@ class CompactionSpec extends SparkSpec {
     import graft.ops.VersionedTable
     import spark.implicits._
     val root = Files.createTempDirectory("graft_vtt_").toString + "/table"
-    Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-      .write.parquet(VersionedTable.nextVersionPath(spark, root))      // v=0
-    Seq((1L, "a2"), (3L, "c")).toDF("id", "s")
-      .write.parquet(VersionedTable.nextVersionPath(spark, root))      // v=1
+    VersionedTable.commit(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))   // v=0
+    VersionedTable.commit(spark, root, Seq((1L, "a2"), (3L, "c")).toDF("id", "s"))  // v=1
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(rows(VersionedTable.readAt(spark, root, 0)) == Set((1L, "a"), (2L, "b")))
@@ -168,10 +166,9 @@ class CompactionSpec extends SparkSpec {
     import graft.ops.VersionedTable
     import spark.implicits._
     val root = Files.createTempDirectory("graft_vevo_").toString + "/table"
-    Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-      .write.parquet(VersionedTable.nextVersionPath(spark, root))          // v=0
-    Seq((1L, "a", 0.5), (2L, "b", 1.5)).toDF("id", "s", "score")
-      .write.parquet(VersionedTable.nextVersionPath(spark, root))          // v=1: +score
+    VersionedTable.commit(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))  // v=0
+    VersionedTable.commit(spark, root,
+      Seq((1L, "a", 0.5), (2L, "b", 1.5)).toDF("id", "s", "score"))                // v=1: +score
     val latest = VersionedTable.read(spark, root, Seq((0L, "")).toDF("id", "s").schema)
     assert(latest.columns.toSeq == Seq("id", "s", "score"),
       "latest readers must see the evolved schema")

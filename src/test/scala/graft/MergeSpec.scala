@@ -41,6 +41,14 @@ class MergeSpec extends SparkSpec {
     val rev = Merge.upsertVersioned(b1.unionByName(b0), keys, "__v")
     assert(canon(fwd) == Set(("a", 1, 5.0), ("b", 2, 2.0)))
     assert(canon(fwd) == canon(rev))
+    // latestPerKey, the window under upsertVersioned: a tie on the version
+    // goes to the larger value, in any row order.
+    Seq(1.0, 3.0, 2.0).permutations.foreach { vs =>
+      val tied = df(vs.map(v => ("a", 1, v)) :+ (("b", 2, 2.0)))
+        .withColumn("__v", org.apache.spark.sql.functions.lit(0))
+      assert(canon(Merge.latestPerKey(tied, keys, Seq("__v")).drop("__v")) ==
+        Set(("a", 1, 3.0), ("b", 2, 2.0)), vs.toString)
+    }
   }
 
   test("upsertVersioned accepts unorderable data columns (maps) — tiebreak skips them") {

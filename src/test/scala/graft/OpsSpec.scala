@@ -285,22 +285,6 @@ class OpsSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  test("observe() collects quality metrics during a real query at no extra scan") {
-    import org.apache.spark.sql.functions._
-    val li = graft.sources.Tables.lineitem(spark, sf0001)
-    val (observed, obs) = graft.ops.Observed.withQualityMetrics(li)
-    // run an ordinary aggregation ON the observed frame — the metrics ride it
-    val revenue = observed.agg(sum(col("l_extendedprice"))).collect().head.getDouble(0)
-    val m = obs.get
-    val expectRows = li.count()
-    val expectNullQty = li.filter(col("l_quantity").isNull).count()
-    assert(m("n_rows") == expectRows)
-    assert(m("null_quantity") == expectNullQty)
-    assert(m("bad_discount") == 0L)
-    assert(m("nonpositive_price") == 0L)
-    assert(revenue > 0.0)
-  }
-
   test("vector ops: cosine of identical vectors is 1, orthogonal is 0") {
     import spark.implicits._
     val df = Seq((Seq(1.0f, 0.0f), Seq(1.0f, 0.0f), Seq(0.0f, 1.0f)))

@@ -1,11 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.ops.{Merge, PartitionedTable}
-import graft.streaming.UpsertPipeline
-import graft.ops.EmissionsEtl
 
 /** The bucket-partitioned warehouse target: merges must (a) equal the plain
   * whole-table Merge.upsert result, (b) physically rewrite ONLY the
@@ -215,12 +213,6 @@ class PartitionedTableSpec extends SparkSpec {
     intercept[IllegalStateException] {
       PartitionedTable.merge(spark, root, df(Seq((1L, "x", 9.0))))
     }
-    intercept[IllegalStateException] {
-      // the pipeline path: exists()==true routes to merge, which fails
-      // loudly at meta() instead of create() wiping the root
-      UpsertPipeline.commitBatchPartitioned(spark, root,
-        df(Seq((1L, "x", 9.0))), nBuckets = 4)
-    }
     assert(spark.read.parquet(root).drop(PartitionedTable.BucketCol).count() == 2,
       "table data must survive a corrupt-marker failure untouched")
     // a MISSING marker (creator crashed before the atomic publish) is the
@@ -277,35 +269,5 @@ class PartitionedTableSpec extends SparkSpec {
     val result = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(5), prop)
     assert(result.passed, result.status.toString)
-  }
-
-  test("pipeline end-to-end: partitioned warehouse sink, re-delivery idempotent") {
-    def writeCsv(dir: Path, name: String, rows: Seq[String]): Unit = {
-      val header = "CountryCode,Year,Scenario,Category,Gas,Reported Value"
-      Files.writeString(dir.resolve(name), (header +: rows).mkString("\n"))
-    }
-    val landing = Files.createTempDirectory("graft_pland_")
-    val warehouse = Files.createTempDirectory("graft_pwh_").toString + "/wh"
-    val checkpoint = Files.createTempDirectory("graft_pckpt_").toString
-    val gas = EmissionsEtl.totalGhgRaw
-    def state(): Map[String, Double] =
-      PartitionedTable.read(spark, warehouse).collect()
-        .map(r => (r.getString(0), r.getDouble(5))).toMap
-
-    writeCsv(landing, "001.csv", Seq(
-      s"""AT,2030,WEM,Energy,"$gas",100.0""",
-      s"""DE,2030,WEM,Energy,"$gas",50.0"""))
-    UpsertPipeline.runOncePartitioned(spark, landing.toString, warehouse, checkpoint)
-    assert(state() == Map("Austria" -> 100.0, "Germany" -> 50.0))
-
-    writeCsv(landing, "002.csv", Seq(
-      s"""AT,2030,WEM,Energy,"$gas",200.0""",
-      s"""FR,2030,WEM,Energy,"$gas",75.0"""))
-    UpsertPipeline.runOncePartitioned(spark, landing.toString, warehouse, checkpoint)
-    assert(state() == Map("Austria" -> 200.0, "Germany" -> 50.0, "France" -> 75.0))
-
-    // nothing new: checkpointed source yields no batch — state holds
-    UpsertPipeline.runOncePartitioned(spark, landing.toString, warehouse, checkpoint)
-    assert(state() == Map("Austria" -> 200.0, "Germany" -> 50.0, "France" -> 75.0))
   }
 }

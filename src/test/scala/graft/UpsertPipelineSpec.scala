@@ -221,73 +221,17 @@ class UpsertPipelineSpec extends SparkSpec {
       "stale re-delivered ops must not roll back or resurrect keys")
   }
 
-  test("incremental rollup maintenance: streamed partials fold to the exact batch recompute") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions._
-    import graft.streaming.EventsStream
-    val landing = Files.createTempDirectory("graft_rollup_landing_")
-    val warehouse = Files.createTempDirectory("graft_rollup_wh_").toString
-    val checkpoint = Files.createTempDirectory("graft_rollup_ckpt_").toString
-    val dayNs = 24L * 3600 * 1000000000L
-    val t0 = 1704067200L * 1000000000L
-    def writeEvents(name: String, rows: Seq[Row]): Unit = {
-      val staging = Files.createTempDirectory("graft_rollup_stage_")
-      spark.createDataFrame(
-          new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-          EventsStream.rawSchema)
-        .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      val listing = Files.list(staging)
-      try {
-        val part = listing.iterator()
-        while (part.hasNext) {
-          val p = part.next()
-          if (p.getFileName.toString.endsWith(".parquet"))
-            Files.move(p, landing.resolve(name))
-        }
-      } finally listing.close()
-    }
-    val batch1 = Seq(
-      Row(1L, t0, 1L, "click", 1.5, "{}"),
-      Row(2L, t0 + 1000L, 2L, "click", 2.5, "{}"),
-      Row(3L, t0 + dayNs, 1L, "view", 4.0, "{}"))
-    val batch2 = Seq(
-      Row(4L, t0 + 2000L, 3L, "click", 8.0, "{}"),   // same day+type as batch1 rows
-      Row(5L, t0 + dayNs, 2L, "view", 16.0, "{}"))
-    def run(): Unit = UpsertPipeline.runOnceRollup(spark, landing.toString, warehouse, checkpoint)
-    writeEvents("e1.parquet", batch1)
-    run()
-    writeEvents("e2.parquet", batch2)
-    run()
-    run() // no new files — rollup must hold
-    import org.apache.spark.sql.types._
-    val rollupSchema = StructType(Seq(
-      StructField("day", TimestampType), StructField("event_type", StringType),
-      StructField("n_events", LongType), StructField("sum_value", DoubleType)))
-    val rollup = graft.ops.VersionedTable.read(spark, warehouse, rollupSchema)
-      .collect()
-      .map(r => (r.getTimestamp(0).toString, r.getString(1)) -> (r.getLong(2), r.getDouble(3)))
-      .toMap
-    assert(rollup == Map(
-      ("2024-01-01 00:00:00.0", "click") -> ((3L, 12.0)),
-      ("2024-01-02 00:00:00.0", "view") -> ((2L, 20.0))))
-    // Compaction: each batch folds the previous cumulative partial and
-    // GCs everything below it, so the partials dir holds at most the
-    // fold source + the newest dir — NOT one dir per batch forever (the
-    // unbounded-growth shape this replaced). Two batches ran, so: dir 1
-    // (cumulative through batch 1) plus batch 0's dir, which batch 1
-    // keeps as its replay fold-source.
-    import scala.jdk.CollectionConverters._
-    val partialDirs = Files.list(java.nio.file.Paths.get(warehouse, "_partials"))
-      .iterator().asScala.map(_.getFileName.toString)
-      .filter(_.startsWith("micro_batch=")).toSeq
-    assert(partialDirs.toSet == Set("micro_batch=0", "micro_batch=1"),
-      s"expected exactly the fold-source and newest cumulative dirs, got $partialDirs")
-    // The newest cumulative dir IS the rollup — bounded by days×types.
-    val cum = spark.read.schema(rollupSchema)
-      .parquet(s"$warehouse/_partials/micro_batch=1").collect()
-      .map(r => (r.getTimestamp(0).toString, r.getString(1)) -> (r.getLong(2), r.getDouble(3)))
-      .toMap
-    assert(cum == rollup.map(identity))
+  test("one file that repeats a key stores the larger value, whatever the row order") {
+    val gas = EmissionsEtl.totalGhgRaw
+    val at = Seq(1.0, 3.0, 2.0).map(v => s"""AT,2030,WEM,Energy,"$gas",$v""")
+    val stored = at.permutations.map { order =>
+      val (landing, warehouse, checkpoint) = dirs()
+      writeCsv(landing, "001.csv", order :+ s"""DE,2030,WEM,Energy,"$gas",50.0""")
+      UpsertPipeline.runOnce(spark, landing.toString, warehouse, checkpoint)
+      UpsertPipeline.currentTable(spark, warehouse).collect()
+        .map(r => (r.getString(0), r.getDouble(5))).toSet
+    }.toSet
+    assert(stored == Set(Set("Austria" -> 3.0, "Germany" -> 50.0)))
   }
 
   test("within one batch, the later file wins on key conflict") {
